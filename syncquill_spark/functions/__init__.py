@@ -9,7 +9,6 @@ bit-identical values (portable across engines, unlike murmur3/xxhash).
 from syncquill_spark.functions.hashing import (
     HASH_PRIME,
     minhash_permutations,
-    minhash_signature,
     portable_hash60,
     rolling_fingerprint,
     simhash,
@@ -22,7 +21,6 @@ __all__ = [
     "portable_hash60",
     "word_shingles",
     "minhash_permutations",
-    "minhash_signature",
     "simhash",
     "rolling_fingerprint",
     "cosine_similarity",

@@ -136,14 +136,6 @@ def _perm_fn(a: int, b: int):
     return lambda h: (F.lit(a) * h + F.lit(b)) % HASH_PRIME
 
 
-def minhash_signature(shingles: Column, n_perm: int = 32) -> Column:
-    """Convenience one-expression form. Prefer the two-stage
-    shingle_hashes + minhash_from_hashes in real pipelines (16x faster,
-    see shingle_hashes docstring); this form is kept for small inputs
-    and API symmetry."""
-    return minhash_from_hashes(shingle_hashes(shingles), n_perm)
-
-
 def token_hashes(tokens: Column) -> Column:
     """Full-range 60-bit hash per token (no mod — simhash needs the
     bits). Materialize in its own projection (see shingle_hashes)."""

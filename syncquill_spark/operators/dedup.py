@@ -26,9 +26,10 @@ from syncquill_spark.operators._cache import tracked_persist
 from syncquill_spark.functions.hashing import (
     HASH_PRIME,
     jaccard_verify,
+    minhash_from_hashes,
     minhash_permutations,
     portable_hash60,
-    word_shingles,
+    shingle_hashes,
     word_shingles_from_tokens,
 )
 
@@ -238,6 +239,190 @@ def ngram_jaccard_pairs(
     )
 
 
+def _rows_per_band(n_perm: int, bands: int) -> int:
+    """The ONE MinHash bands/n_perm check: rows per band, or a named
+    refusal (an explicit raise — asserts vanish under -O, r15)."""
+    if bands < 1 or n_perm % bands != 0:
+        raise ValueError(f"bands={bands} must divide n_perm={n_perm}")
+    return n_perm // bands
+
+
+def _band_keys(sh: DataFrame, id_col: str, n_perm: int, bands: int, per_row: bool) -> DataFrame:
+    """(id, _band, _key) rows, one per band per doc, from an (id, _sh)
+    shingle frame. Two signature forms with identical values (unit-
+    pinned, sub-k and empty docs included — both give the sentinel P
+    signature):
+
+    - grouped (``per_row=False``): explode + ONE groupBy with n_perm
+      codegen ``min()`` aggregates — map-side partial agg, no
+      interpreted lambda folds; explode_outer keeps empty-shingle docs
+      (null hash -> min() ignores it -> coalesced to P).
+    - per-row (``per_row=True``): ``array_min`` over each permuted hash
+      array, aggregation-free — the only form a stream can run. Hashes
+      land in their own projection first (functions.hashing
+      ``shingle_hashes``: no interpreted subexpression sharing).
+    """
+    r = _rows_per_band(n_perm, bands)
+    if per_row:
+        sig = (
+            sh.select(F.col(id_col), shingle_hashes(F.col("_sh")).alias("_h"))
+            .select(F.col(id_col), minhash_from_hashes(F.col("_h"), n_perm).alias("_sig"))
+        )
+        # literal-index reads of the array collapse to the per-perm
+        # expressions (SimplifyExtractValueOps)
+        mins = sig.select(
+            F.col(id_col), *[F.col("_sig")[j].alias(f"_m{j}") for j in range(n_perm)]
+        )
+    else:
+        ex = sh.select(
+            F.col(id_col), F.explode_outer("_sh").alias("_s")
+        ).withColumn("_h", portable_hash60(F.col("_s")) % HASH_PRIME)
+        mins = ex.groupBy(id_col).agg(
+            *[
+                F.coalesce(
+                    F.min((F.lit(a) * F.col("_h") + F.lit(b)) % HASH_PRIME),
+                    F.lit(HASH_PRIME).cast("long"),
+                ).alias(f"_m{j}")
+                for j, (a, b) in enumerate(minhash_permutations(n_perm))
+            ]
+        )
+    band_structs = [
+        F.struct(
+            F.lit(bi).alias("band"),
+            F.concat_ws(
+                ",", *[F.col(f"_m{bi * r + o}").cast("string") for o in range(r)]
+            ).alias("key"),
+        )
+        for bi in range(bands)
+    ]
+    return mins.select(
+        F.col(id_col), F.explode(F.array(*band_structs)).alias("_b")
+    ).select(id_col, F.col("_b.band").alias("_band"), F.col("_b.key").alias("_key"))
+
+
+def minhash_band_keys(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 3,
+    n_perm: int = 32,
+    bands: int = 8,
+) -> tuple[DataFrame, DataFrame]:
+    """THE MinHash-LSH key builder every MinHash operator, index and
+    gate composes: ``(keys, shingles)`` with keys = (id, _band, _key),
+    one row per band per doc, and shingles = (id, _sh), the doc's
+    distinct word k-shingles for the exact-Jaccard verify.
+
+    The signature form follows the input, nothing else: a batch frame
+    takes the grouped form with the shingle frame tracked-persisted (it
+    feeds the signature AND the verify), a streaming frame takes the
+    per-row form (a stream can neither aggregate inside a stream-static
+    join nor persist). The grouped form is the cheaper one at scale
+    (SCALE.md); the two emit identical keys, so a stream gate matches a
+    batch-built index. Keys are not persisted here: most callers read
+    them once, and a persist then only adds a cache write.
+    """
+    _rows_per_band(n_perm, bands)  # refuse before persisting anything
+    # tokens in their own projection: the shingle expression references
+    # them k+1 times and interpreted evaluation would re-split per use
+    sh = df.select(
+        F.col(id_col),
+        F.split(F.trim(F.col(text_col)), r"\s+").alias("_toks"),
+    ).select(
+        F.col(id_col),
+        F.array_distinct(word_shingles_from_tokens(F.col("_toks"), k)).alias("_sh"),
+    )
+    if not df.isStreaming:
+        # tracked (not bare) so release_cached_intermediates() frees it
+        # between batches (_cache.py)
+        sh = tracked_persist(sh)
+    return _band_keys(sh, id_col, n_perm, bands, per_row=df.isStreaming), sh
+
+
+def _jaccard_verified(
+    cand: DataFrame,
+    a: str,
+    b: str,
+    sh_a: DataFrame,
+    a_src: str,
+    sh_b: DataFrame,
+    b_src: str,
+    threshold: float,
+) -> DataFrame:
+    """The ONE MinHash verify tail: (a, b, jac) for candidate rows
+    (a, b), jac the exact Jaccard of the two (id, _sh) shingle arrays
+    looked up by id (``a_src``/``b_src`` name the lookup frames' id
+    columns). Candidates are ~duplicate-count rows, so this is two
+    joins of a small frame against the shingle frames, never a
+    re-shingling. jac is NULL when both sets are empty (sentinel-
+    signature collisions of sub-k docs): ANSI 0/0 would abort the job
+    (functions.hashing.jaccard_verify), and NULL fails the filter."""
+    la = sh_a.select(F.col(a_src).alias("_ia"), F.col("_sh").alias("_sh_a"))
+    lb = sh_b.select(F.col(b_src).alias("_ib"), F.col("_sh").alias("_sh_b"))
+    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
+    union = F.size(F.array_union("_sh_a", "_sh_b"))
+    return (
+        cand.join(la, F.col(a) == F.col("_ia"))
+        .join(lb, F.col(b) == F.col("_ib"))
+        .select(a, b, jaccard_verify(inter, union).alias("jac"))
+        .filter(F.col("jac") >= threshold)
+    )
+
+
+def minhash_self_pairs(
+    keys: DataFrame, sh: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jac) with id_a < id_b: the self-pair core — band
+    bucket self-equi-join on (band, key), distinct candidates, exact-
+    Jaccard verify. ``keys``/``sh`` are :func:`minhash_band_keys`
+    frames, built from text or loaded from a persisted index."""
+    left = keys.select(
+        F.col("_band").alias("_lb"), F.col("_key").alias("_lk"),
+        F.col(id_col).alias("id_a"),
+    )
+    right = keys.select(
+        F.col("_band").alias("_rb"), F.col("_key").alias("_rk"),
+        F.col(id_col).alias("id_b"),
+    )
+    cand = (
+        left.join(
+            right,
+            (left["_lb"] == right["_rb"]) & (left["_lk"] == right["_rk"])
+            & (left["id_a"] < right["id_b"]),
+        )
+        .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    return _jaccard_verified(cand, "id_a", "id_b", sh, id_col, sh, id_col, threshold)
+
+
+def minhash_cross_pairs(
+    keys_new: DataFrame,
+    sh_new: DataFrame,
+    new_id: str,
+    keys_corpus: DataFrame,
+    sh_corpus: DataFrame,
+    corpus_id: str,
+    threshold: float,
+    per_band: bool = False,
+) -> DataFrame:
+    """(id_new, id_corpus, jac): the cross-pair core — new-side band
+    keys equi-joined to corpus-side keys on (band, key), exact-Jaccard
+    verified. Batch contract: id_new != id_corpus, one row per pair.
+    ``per_band=True`` is the stream contract: one row per colliding
+    band and no id filter (a stream cannot drop duplicates globally;
+    callers dedupe per microbatch)."""
+    kn = keys_new.select("_band", "_key", F.col(new_id).alias("id_new"))
+    kc = keys_corpus.select("_band", "_key", F.col(corpus_id).alias("id_corpus"))
+    cand = kn.join(kc, ["_band", "_key"]).select("id_new", "id_corpus")
+    if not per_band:
+        cand = cand.filter(F.col("id_new") != F.col("id_corpus")).dropDuplicates(
+            ["id_new", "id_corpus"]
+        )
+    return _jaccard_verified(
+        cand, "id_new", "id_corpus", sh_new, new_id, sh_corpus, corpus_id, threshold
+    )
+
 
 def minhash_lsh_pairs(
     df: DataFrame,
@@ -253,104 +438,16 @@ def minhash_lsh_pairs(
     signature (n_perm mins) -> split into `bands` bands of n_perm/bands
     rows -> explode one row per (band_idx, band_key) -> self-join on the
     band bucket -> distinct candidate pairs -> verify with true shingle
-    Jaccard >= threshold.
+    Jaccard >= threshold. Output: (id_a, id_b, jac) with id_a < id_b.
 
     Scale: the only joins are equi-joins on (band_idx, band_signature);
     candidate count ~ true-duplicate count, never O(n^2). Probability a
     pair at similarity s collides: 1-(1-s^r)^b with r = n_perm/bands.
     """
-    if bands < 1 or n_perm % bands != 0:  # explicit raise: asserts vanish under -O (r15)
-        raise ValueError(f"bands={bands} must divide n_perm={n_perm}")
-    r = n_perm // bands
-
-    # Signatures come from explode + ONE groupBy with n_perm codegen
-    # min() aggregates (map-side partial agg, no interpreted lambda
-    # folds). explode_outer keeps empty-shingle docs (null hash →
-    # min() ignores it → sentinel P signature, as before). The compact
-    # (id, shingle-array) frame is what gets persisted: it feeds the
-    # exploded signature path AND the candidate verification.
-    sh = df.select(
-        F.col(id_col),
-        F.split(F.trim(F.col(text_col)), r"\s+").alias("_toks"),
-    ).select(
-        F.col(id_col),
-        F.array_distinct(word_shingles_from_tokens(F.col("_toks"), k)).alias("_sh"),
-    )
-    # feeds the exploded signature path AND both verify-join sides;
-    # tracked so a batch driver can release it between calls (_cache.py)
-    sh = tracked_persist(sh)
-    ex = sh.select(
-        F.col(id_col), F.explode_outer("_sh").alias("_s")
-    ).withColumn("_h", portable_hash60(F.col("_s")) % HASH_PRIME)
-    perms = minhash_permutations(n_perm)
-    sigs = ex.groupBy(id_col).agg(
-        *[
-            F.coalesce(
-                F.min((F.lit(a) * F.col("_h") + F.lit(b)) % HASH_PRIME),
-                F.lit(HASH_PRIME).cast("long"),
-            ).alias(f"_m{j}")
-            for j, (a, b) in enumerate(perms)
-        ]
-    )
-
-    band_structs = [
-        F.struct(
-            F.lit(bi).alias("band"),
-            F.concat_ws(
-                ",", *[F.col(f"_m{bi * r + o}").cast("string") for o in range(r)]
-            ).alias("key"),
-        )
-        for bi in range(bands)
-    ]
-    buckets = (
-        sigs.select(
-            F.col(id_col), F.explode(F.array(*band_structs)).alias("_b")
-        )
-        .select(id_col, F.col("_b.band").alias("_band"), F.col("_b.key").alias("_key"))
-    )
-    # feeds BOTH self-join sides; unpersisted, the n_perm-min
-    # signature aggregation runs twice. Tracked (not a bare persist)
-    # so release_cached_intermediates() frees it between batches.
-    buckets = tracked_persist(buckets)
-
-    left = buckets.select(
-        F.col("_band").alias("_lb"), F.col("_key").alias("_lk"),
-        F.col(id_col).alias("id_a"),
-    )
-    right = buckets.select(
-        F.col("_band").alias("_rb"), F.col("_key").alias("_rk"),
-        F.col(id_col).alias("id_b"),
-    )
-    cand = (
-        left.join(
-            right,
-            (left["_lb"] == right["_rb"]) & (left["_lk"] == right["_rk"])
-            & (left["id_a"] < right["id_b"]),
-        )
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # Exact-Jaccard verify: candidates are ~duplicate-count rows (tiny
-    # next to the corpus), so fetch each side's cached shingle array
-    # and intersect directly — two joins of a small frame against the
-    # persisted sh, not a re-shingling.
-    sh_a = sh.select(F.col(id_col).alias("_ia"), F.col("_sh").alias("_sh_a"))
-    sh_b = sh.select(F.col(id_col).alias("_ib"), F.col("_sh").alias("_sh_b"))
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size(F.array_union("_sh_a", "_sh_b"))
-    return (
-        cand.join(sh_a, F.col("id_a") == F.col("_ia"))
-        .join(sh_b, F.col("id_b") == F.col("_ib"))
-        .select(
-            "id_a",
-            "id_b",
-            # NULL when both shingle sets are empty (sentinel-signature
-            # collisions) — ANSI 0/0 would abort the job; see
-            # functions.hashing.jaccard_verify
-            jaccard_verify(inter, union).alias("jac"),
-        )
-        .filter(F.col("jac") >= threshold)
-    )
+    keys, sh = minhash_band_keys(df, id_col, text_col, k, n_perm, bands)
+    # keys feed BOTH self-join sides; unpersisted, the n_perm-min
+    # signature aggregation runs twice
+    return minhash_self_pairs(tracked_persist(keys), sh, id_col, threshold)
 
 
 def minhash_lsh_pairs_against(
@@ -369,110 +466,16 @@ def minhash_lsh_pairs_against(
     is checked against everything already kept, and only the new side
     is small.
 
-    Output: (id_new, id_corpus, jac) with jac >= threshold.
-
-    Same machinery as :func:`minhash_lsh_pairs` (signatures -> banded
-    bucket equi-join -> cached-shingle verify) but the bucket join is
-    new-side x corpus-side only — no corpus self-pairs, no new
-    self-pairs. Signatures are computed over the tagged union in one
-    pass here; a production pipeline persists the corpus's band keys as
-    an index and recomputes only the new side per snapshot (the join
-    shape — equi-join on (band, key) — is identical).
+    Output: (id_new, id_corpus, jac) with jac >= threshold and
+    id_new != id_corpus — no corpus self-pairs, no new self-pairs.
+    Both sides are keyed from text here; a production pipeline persists
+    the corpus's keys as an index and keys only the new side per
+    snapshot (``streaming.text_dedup.text_near_dups_against_index``,
+    the same cross-pair core).
     """
-    if bands < 1 or n_perm % bands != 0:  # explicit raise: asserts vanish under -O (r15)
-        raise ValueError(f"bands={bands} must divide n_perm={n_perm}")
-    r = n_perm // bands
-
-    tagged = new_df.select(
-        F.col(id_col), F.col(text_col), F.lit("n").alias("_side")
-    ).unionByName(
-        corpus_df.select(F.col(id_col), F.col(text_col), F.lit("c").alias("_side"))
-    )
-    sh = tagged.select(
-        F.col(id_col),
-        "_side",
-        F.split(F.trim(F.col(text_col)), r"\s+").alias("_toks"),
-    ).select(
-        F.col(id_col),
-        "_side",
-        F.array_distinct(word_shingles_from_tokens(F.col("_toks"), k)).alias("_sh"),
-    )
-    # feeds the signature aggregation AND the verify join's shingle
-    # lookups; tracked so the per-batch ingest-gate loop can release
-    # it after each batch's terminal action (_cache.py)
-    sh = tracked_persist(sh)
-    ex = sh.select(
-        F.col(id_col), "_side", F.explode_outer("_sh").alias("_s")
-    ).withColumn("_h", portable_hash60(F.col("_s")) % HASH_PRIME)
-    perms = minhash_permutations(n_perm)
-    sigs = ex.groupBy(id_col, "_side").agg(
-        *[
-            F.coalesce(
-                F.min((F.lit(a) * F.col("_h") + F.lit(b)) % HASH_PRIME),
-                F.lit(HASH_PRIME).cast("long"),
-            ).alias(f"_m{j}")
-            for j, (a, b) in enumerate(perms)
-        ]
-    )
-    band_structs = [
-        F.struct(
-            F.lit(bi).alias("band"),
-            F.concat_ws(
-                ",", *[F.col(f"_m{bi * r + o}").cast("string") for o in range(r)]
-            ).alias("key"),
-        )
-        for bi in range(bands)
-    ]
-    buckets = (
-        sigs.select(
-            F.col(id_col), "_side", F.explode(F.array(*band_structs)).alias("_b")
-        )
-        .select(
-            id_col, "_side", F.col("_b.band").alias("_band"), F.col("_b.key").alias("_key")
-        )
-    )
-    # feeds both filtered join sides; unpersisted, the signature
-    # aggregation over the tagged union runs twice; tracked for the
-    # same per-batch release discipline as the shingle frame above
-    buckets = tracked_persist(buckets)
-    left = buckets.filter(F.col("_side") == "n").select(
-        F.col("_band").alias("_lb"), F.col("_key").alias("_lk"),
-        F.col(id_col).alias("id_new"),
-    )
-    right = buckets.filter(F.col("_side") == "c").select(
-        F.col("_band").alias("_rb"), F.col("_key").alias("_rk"),
-        F.col(id_col).alias("id_corpus"),
-    )
-    cand = (
-        left.join(
-            right,
-            (left["_lb"] == right["_rb"]) & (left["_lk"] == right["_rk"])
-            & (left["id_new"] != right["id_corpus"]),
-        )
-        .select("id_new", "id_corpus")
-        .dropDuplicates(["id_new", "id_corpus"])
-    )
-    sh_a = sh.filter(F.col("_side") == "n").select(
-        F.col(id_col).alias("_ia"), F.col("_sh").alias("_sh_a")
-    )
-    sh_b = sh.filter(F.col("_side") == "c").select(
-        F.col(id_col).alias("_ib"), F.col("_sh").alias("_sh_b")
-    )
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size(F.array_union("_sh_a", "_sh_b"))
-    return (
-        cand.join(sh_a, F.col("id_new") == F.col("_ia"))
-        .join(sh_b, F.col("id_corpus") == F.col("_ib"))
-        .select(
-            "id_new",
-            "id_corpus",
-            # NULL on empty-vs-empty (see jaccard_verify): an empty
-            # batch doc must not crash the ingest gate against an
-            # empty corpus doc
-            jaccard_verify(inter, union).alias("jac"),
-        )
-        .filter(F.col("jac") >= threshold)
-    )
+    kn, sn = minhash_band_keys(new_df, id_col, text_col, k, n_perm, bands)
+    kc, sc = minhash_band_keys(corpus_df, id_col, text_col, k, n_perm, bands)
+    return minhash_cross_pairs(kn, sn, id_col, kc, sc, id_col, threshold)
 
 
 def simhash_fingerprints(

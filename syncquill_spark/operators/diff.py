@@ -52,14 +52,30 @@ CHANGE_SET_SCHEMA = T.StructType(
 _CHANGE_COLS = ["change_type", "slno", "col", "old_value", "new_value"]
 
 
-def _cell_diff_exprs(cols: list[str], key: str):
-    """Array<struct(col, old, new)> of per-column mismatches.
+def _change_rows(joined: DataFrame, key: str, cell_cols: list[str]) -> DataFrame:
+    """Change-set rows from a full-outer join of ``__t_*`` (target) and
+    ``__s_*`` (source) columns: a row missing on the source side is a
+    ``del_row``, one missing on the target side an ``extra_row``, and
+    a paired row emits one ``diff`` per mismatched column of
+    ``cell_cols``, keyed by the target side's key.
 
     Null-safe inequality (`NOT (l <=> r)`): the reference can never see
     nulls post-validation, but the operator tolerates them (a null vs
-    non-null cell is a change; null vs null is not).
+    non-null cell is a change; null vs null is not). The unpivot is a
+    generate (explode) over an already-filtered array, so output volume
+    is proportional to actual changes, not table width x rows.
     """
-    return F.filter(
+    tk, sk = F.col(f"__t_{key}"), F.col(f"__s_{key}")
+    no_cell = [
+        F.lit(None).cast("string").alias(c) for c in ("col", "old_value", "new_value")
+    ]
+    deleted = joined.filter(sk.isNull()).select(
+        F.lit("del_row").alias("change_type"), tk.alias("slno"), *no_cell
+    )
+    inserted = joined.filter(tk.isNull()).select(
+        F.lit("extra_row").alias("change_type"), sk.alias("slno"), *no_cell
+    )
+    mismatches = F.filter(
         F.array(
             *[
                 F.struct(
@@ -67,21 +83,31 @@ def _cell_diff_exprs(cols: list[str], key: str):
                     F.col(f"__t_{c}").alias("old_value"),
                     F.col(f"__s_{c}").alias("new_value"),
                 )
-                for c in cols
-                if c != key
+                for c in cell_cols
             ]
         ),
         lambda s: ~s["old_value"].eqNullSafe(s["new_value"]),
     )
+    matched = (
+        joined.filter(tk.isNotNull() & sk.isNotNull())
+        .select(tk.alias("slno"), F.explode(mismatches).alias("c"))
+        .select(
+            F.lit("diff").alias("change_type"),
+            "slno",
+            F.col("c.col").alias("col"),
+            F.col("c.old_value").alias("old_value"),
+            F.col("c.new_value").alias("new_value"),
+        )
+    )
+    return deleted.unionByName(inserted).unionByName(matched)
 
 
 def diff_keyed(target: DataFrame, source: DataFrame, key: str = "slno") -> DataFrame:
     """Keyed CDC diff: one full-outer join on ``key``, no global sort.
 
     Scale notes: single shuffle on the key for both sides; AQE handles
-    skew and broadcast conversion. The unpivot-to-change-rows step is a
-    generate (explode) over an already-filtered array, so output volume
-    is proportional to actual changes, not table width x rows.
+    skew and broadcast conversion; change rows come from
+    ``_change_rows``, cell diffs over the non-key columns.
     """
     cols = [c for c in target.columns if c in set(source.columns)]
     if key not in cols:
@@ -95,36 +121,7 @@ def diff_keyed(target: DataFrame, source: DataFrame, key: str = "slno") -> DataF
     )
 
     joined = t.join(s, t[f"__t_{key}"] == s[f"__s_{key}"], "full_outer")
-
-    deleted = joined.filter(F.col(f"__s_{key}").isNull()).select(
-        F.lit("del_row").alias("change_type"),
-        F.col(f"__t_{key}").alias("slno"),
-        F.lit(None).cast("string").alias("col"),
-        F.lit(None).cast("string").alias("old_value"),
-        F.lit(None).cast("string").alias("new_value"),
-    )
-    inserted = joined.filter(F.col(f"__t_{key}").isNull()).select(
-        F.lit("extra_row").alias("change_type"),
-        F.col(f"__s_{key}").alias("slno"),
-        F.lit(None).cast("string").alias("col"),
-        F.lit(None).cast("string").alias("old_value"),
-        F.lit(None).cast("string").alias("new_value"),
-    )
-    matched = (
-        joined.filter(F.col(f"__t_{key}").isNotNull() & F.col(f"__s_{key}").isNotNull())
-        .select(
-            F.col(f"__t_{key}").alias("slno"),
-            F.explode(_cell_diff_exprs(cols, key)).alias("c"),
-        )
-        .select(
-            F.lit("diff").alias("change_type"),
-            "slno",
-            F.col("c.col").alias("col"),
-            F.col("c.old_value").alias("old_value"),
-            F.col("c.new_value").alias("new_value"),
-        )
-    )
-    return deleted.unionByName(inserted).unionByName(matched)
+    return _change_rows(joined, key, [c for c in cols if c != key])
 
 
 def diff_positional(
@@ -173,50 +170,7 @@ def diff_positional(
     )
 
     joined = t.join(s, "__pos", "full_outer")
-
-    deleted = joined.filter(F.col(f"__s_{key}").isNull()).select(
-        F.lit("del_row").alias("change_type"),
-        F.col(f"__t_{key}").alias("slno"),
-        F.lit(None).cast("string").alias("col"),
-        F.lit(None).cast("string").alias("old_value"),
-        F.lit(None).cast("string").alias("new_value"),
-    )
-    inserted = joined.filter(F.col(f"__t_{key}").isNull()).select(
-        F.lit("extra_row").alias("change_type"),
-        F.col(f"__s_{key}").alias("slno"),
-        F.lit(None).cast("string").alias("col"),
-        F.lit(None).cast("string").alias("old_value"),
-        F.lit(None).cast("string").alias("new_value"),
-    )
     # Paired rows: unlike keyed mode, the KEY COLUMN ITSELF can differ
     # (misaligned rows) and the reference emits that as a normal cell
     # diff (j ranges over all columns, syncquill.py:126-128).
-    matched = (
-        joined.filter(F.col(f"__t_{key}").isNotNull() & F.col(f"__s_{key}").isNotNull())
-        .select(
-            F.col(f"__t_{key}").alias("slno"),
-            F.explode(
-                F.filter(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(c).alias("col"),
-                                F.col(f"__t_{c}").alias("old_value"),
-                                F.col(f"__s_{c}").alias("new_value"),
-                            )
-                            for c in cols
-                        ]
-                    ),
-                    lambda st: ~st["old_value"].eqNullSafe(st["new_value"]),
-                )
-            ).alias("c"),
-        )
-        .select(
-            F.lit("diff").alias("change_type"),
-            "slno",
-            F.col("c.col").alias("col"),
-            F.col("c.old_value").alias("old_value"),
-            F.col("c.new_value").alias("new_value"),
-        )
-    )
-    return deleted.unionByName(inserted).unionByName(matched)
+    return _change_rows(joined, key, cols)

@@ -91,9 +91,10 @@ def referential_orphans(
 
     The data-quality gate a pipeline runs before training joins:
     orphaned facts silently vanish from inner joins, skewing every
-    downstream aggregate. Scale shape: one left-anti equi-join on the
-    key (parent side is keys-only and deduped, so AQE broadcasts it
-    when it fits) + two counts — the child never shuffles payloads.
+    downstream aggregate. Scale shape: one LEFT equi-join on the key
+    (parent side is keys-only and deduped, so AQE broadcasts it when it
+    fits) feeding a single aggregation that counts rows and hits
+    together — the child is scanned once and never shuffles payloads.
     """
     rel = relation or f"{child_key}->{parent_key}"
     keys = (

@@ -131,6 +131,20 @@ _ALL_ORACLES = {**_CORE_ORACLES, **EXT_ORACLES}
 #      discarded; OPTIMIZATION_r17.md §2). Output verified
 #      hash-identical at all three SFs; scheduled jobs 39 -> 27,
 #      isolated median ~1.2x.
+#  (2) One MinHash-LSH core (operators/dedup.py: minhash_band_keys,
+#      minhash_self_pairs, minhash_cross_pairs): the streaming/
+#      text_dedup.py MinHash functions and minhash_lsh_pairs_against
+#      now compose the same key builder and verify tail as
+#      minhash_lsh_pairs. Changed plans: dedup_incremental and
+#      curation_fuzzy_decontaminate (each side keyed separately
+#      instead of one tagged-union aggregation), pipeline_training_mix
+#      (via fuzzy_decontaminate), storage_index_roundtrip (the new
+#      side takes the grouped signature form instead of the per-row
+#      one) and storage_index_incremental (verify lookups renamed,
+#      same operators). dedup_minhash_lsh and dedup_apply keep their
+#      plans (normalized explain text identical). All five changed
+#      rows verified hash-identical at sf0.001/0.01/0.1 and are NOT in
+#      the 42 below, so they join the r18 mandatory leads.
 #  Slot-free maintenance this round (no plan expression changes —
 #  the r15/r16 precedent): session default
 #  spark.sql.files.openCostInBytes 4MB -> 256KB (env-overridable),
@@ -159,8 +173,8 @@ _ALL_ORACLES = {**_CORE_ORACLES, **EXT_ORACLES}
 # text_quality_rules, text_readability, text_segment_dedup,
 # text_sentences_udtf, text_term_stats, text_token_counts.
 # r18 capacity check: 42 staleness-2 + any deviation rows recorded
-# above that are NOT already in the 42 + 0 registrations (frozen) =
-# 42+ mandatory, leaving up to 8 fill slots — the steady 42+8
+# above that are NOT already in the 42 (the 5 MinHash rows of (2)) +
+# 0 registrations (frozen) = 47 mandatory, leaving 3 fill slots — the steady 42+8
 # rotation resumes provided deviations stay inside the r15-green
 # cohort (re-check this arithmetic when recording each deviation).
 # The 50 r16-green rows not in this window rotate out at staleness 1.

@@ -11,7 +11,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from syncquill_spark.functions.hashing import jaccard_verify
+from syncquill_spark.operators.dedup import (
+    minhash_band_keys,
+    minhash_cross_pairs,
+    minhash_self_pairs,
+)
 
 
 def build_text_hash_index(
@@ -36,6 +40,11 @@ def stream_drop_seen_text(
     return hashed.join(index, "_text_sha", "left_anti").drop("_text_sha")
 
 
+def _index_shingles(index_shingles: DataFrame) -> DataFrame:
+    """Stored (corpus_id, _sh_c) back in the builder's (id, _sh) layout."""
+    return index_shingles.select("corpus_id", F.col("_sh_c").alias("_sh"))
+
+
 def build_text_minhash_index(
     corpus: DataFrame,
     id_col: str = "doc_id",
@@ -47,73 +56,14 @@ def build_text_minhash_index(
     """One-time corpus MinHash index for streaming fuzzy dedup:
     (keys, shingles) where keys = (corpus_id, band, key) band buckets
     and shingles = (corpus_id, shingle array) for the exact-Jaccard
-    verify. Same signature math as the batch operators
-    (md5-derived permutations over 60-bit shingle hashes), computed in
-    the per-ROW array form (array_min over the permuted hash array) —
-    identical values to the batch groupBy-min form, and the same form
-    the stream side uses, so parity is by construction."""
-    keyed, sh = _row_minhash(corpus, id_col, text_col, k, n_perm, bands)
+    verify — :func:`syncquill_spark.operators.dedup.minhash_band_keys`
+    renamed to the index layout, so the keys equal those of every
+    other MinHash operator (the stream gate's per-row form included)."""
+    keys, sh = minhash_band_keys(corpus, id_col, text_col, k, n_perm, bands)
     return (
-        keyed.withColumnRenamed(id_col, "corpus_id"),
+        keys.withColumnRenamed(id_col, "corpus_id"),
         sh.select(F.col(id_col).alias("corpus_id"), F.col("_sh").alias("_sh_c")),
     )
-
-
-def _row_minhash(
-    df: DataFrame, id_col: str, text_col: str, k: int, n_perm: int, bands: int
-):
-    """Per-row MinHash band keys, aggregation-free (streaming-safe):
-    (keyed=(id, band, key) one row per band, sh=(id, _sh)). Shingles
-    and their hashes each land in their OWN projection per the repo's
-    HOF rule (no interpreted subexpression sharing)."""
-    from syncquill_spark.functions.hashing import (
-        minhash_from_hashes,
-        shingle_hashes,
-        word_shingles,
-    )
-
-    if bands < 1 or n_perm % bands != 0:  # explicit raise: asserts vanish under -O (r15)
-        raise ValueError(f"bands={bands} must divide n_perm={n_perm}")
-    r = n_perm // bands
-    sh = df.select(
-        F.col(id_col), word_shingles(F.col(text_col), k=k).alias("_sh")
-    )
-    # every caller consumes BOTH returned frames (index build: the
-    # keys part write + the shingles part write; gates: the band join
-    # + the exact-Jaccard verify), and both derive from this shingle
-    # projection — unpersisted, the regex split + k-way zip_with runs
-    # once per consumer (guide §2.4; the minhash_lsh_pairs doctrine).
-    # Streaming frames cannot persist, so the per-row stream gate
-    # (stream_text_near_dups) keeps its recompute semantics.
-    if not df.isStreaming:
-        from syncquill_spark.operators._cache import tracked_persist
-
-        sh = tracked_persist(sh)
-    sig = (
-        sh.select(id_col, "_sh", shingle_hashes(F.col("_sh")).alias("_h"))
-        .select(id_col, "_sh", minhash_from_hashes(F.col("_h"), n_perm).alias("_sig"))
-    )
-    band_structs = [
-        F.struct(
-            F.lit(bi).alias("band"),
-            F.array_join(
-                F.transform(
-                    F.slice(F.col("_sig"), bi * r + 1, r),
-                    lambda x: x.cast("string"),
-                ),
-                ",",
-            ).alias("key"),
-        )
-        for bi in range(bands)
-    ]
-    keyed = sig.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("_b")
-    ).select(
-        id_col,
-        F.col("_b.band").alias("_band"),
-        F.col("_b.key").alias("_key"),
-    )
-    return keyed, sh
 
 
 def text_near_dups_against_index(
@@ -129,49 +79,24 @@ def text_near_dups_against_index(
 ) -> DataFrame:
     """(id_new, id_corpus, jac) — BATCH fuzzy dedup of a new snapshot
     against a PERSISTED corpus index (the frames ``save_index`` /
-    ``load_index`` round-trip): per-row MinHash on the new side only,
-    band equi-join against the stored (corpus_id, band, key) buckets,
-    candidate pairs deduped, exact-Jaccard verified against the stored
-    shingle arrays. Same match set as
+    ``load_index`` round-trip): only the new side is keyed, then the
+    cross-pair core (band equi-join against the stored keys, distinct
+    candidates, exact-Jaccard verify against the stored shingles).
+    Same match set as
     :func:`syncquill_spark.operators.dedup.minhash_lsh_pairs_against`
     recomputing both sides from text — persistence is invisible, which
     is exactly what the registry's storage_index_roundtrip query
     asserts against that operator's own oracle. Streaming twin:
-    :func:`stream_text_near_dups` (identical joins, minus the
-    dropDuplicates a stream cannot do globally).
+    :func:`stream_text_near_dups`.
 
     Scale shape: only the (small) new side is shingled per batch; the
     corpus index is read, never recomputed — the join keys are the
     skinny persisted (id, band, key) rows.
     """
-    keyed, sh = _row_minhash(new_df, id_col, text_col, k, n_perm, bands)
-    cand = (
-        keyed.withColumnRenamed(id_col, "id_new")
-        .join(
-            index_keys.withColumnRenamed("corpus_id", "id_corpus"),
-            ["_band", "_key"],
-        )
-        .filter(F.col("id_new") != F.col("id_corpus"))
-        .select("id_new", "id_corpus")
-        .dropDuplicates(["id_new", "id_corpus"])
-    )
-    s_sh = sh.select(F.col(id_col).alias("id_new"), F.col("_sh").alias("_sh_s"))
-    c_sh = index_shingles.select(
-        F.col("corpus_id").alias("id_corpus"), F.col("_sh_c")
-    )
-    inter = F.size(F.array_intersect("_sh_s", "_sh_c"))
-    union = F.size(F.array_union("_sh_s", "_sh_c"))
-    return (
-        cand.join(s_sh, "id_new")
-        .join(c_sh, "id_corpus")
-        .select(
-            "id_new",
-            "id_corpus",
-            # NULL on empty-vs-empty sentinel collisions — ANSI 0/0 would
-            # abort the job; see functions.hashing.jaccard_verify
-            jaccard_verify(inter, union).alias("jac"),
-        )
-        .filter(F.col("jac") >= threshold)
+    keys, sh = minhash_band_keys(new_df, id_col, text_col, k, n_perm, bands)
+    return minhash_cross_pairs(
+        keys, sh, id_col, index_keys, _index_shingles(index_shingles), "corpus_id",
+        threshold,
     )
 
 
@@ -186,16 +111,15 @@ def merge_text_minhash_index(
     bands: int = 8,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental index maintenance: extend a persisted corpus index
-    with a new batch WITHOUT re-shingling the corpus — compute the
-    batch's per-row MinHash (same math as ``build_text_minhash_index``)
-    and union it onto the stored frames. The result must be
-    INDISTINGUISHABLE from rebuilding over corpus+batch (same per-doc
-    signatures either way — MinHash is per-row, so an index is just
-    the union of its docs' rows); the registry's
-    ``storage_index_incremental`` query pins that identity to
-    ``dedup_minhash_lsh``'s own oracle. At 100 TB this is the nightly
-    shape: one batch-sized signature pass + a metadata append, never a
-    corpus pass."""
+    with a new batch WITHOUT re-shingling the corpus — key the batch
+    (same builder as ``build_text_minhash_index``) and union it onto
+    the stored frames. The result must be INDISTINGUISHABLE from
+    rebuilding over corpus+batch (same per-doc signatures either way —
+    MinHash is per-doc, so an index is just the union of its docs'
+    rows); the registry's ``storage_index_incremental`` query pins that
+    identity to ``dedup_minhash_lsh``'s own oracle. At 100 TB this is
+    the nightly shape: one batch-sized signature pass + a metadata
+    append, never a corpus pass."""
     new_keys, new_sh = build_text_minhash_index(
         new_df, id_col=id_col, text_col=text_col, k=k, n_perm=n_perm, bands=bands
     )
@@ -211,49 +135,13 @@ def minhash_pairs_from_index(
     threshold: float = 0.5,
 ) -> DataFrame:
     """(id_a, id_b, jac) self-join near-dup pairs computed ENTIRELY
-    from a stored index — no text needed: band-bucket equi-join on the
-    persisted (corpus_id, band, key) rows (id_a < id_b), distinct
-    candidates, exact-Jaccard verify against the persisted shingle
-    arrays. Output contract matches
-    :func:`syncquill_spark.operators.dedup.minhash_lsh_pairs`
-    recomputing from text — the identity that makes a persisted index
-    trustworthy after any append (``merge_text_minhash_index``)."""
-    left = index_keys.select(
-        F.col("_band").alias("_lb"), F.col("_key").alias("_lk"),
-        F.col("corpus_id").alias("id_a"),
-    )
-    right = index_keys.select(
-        F.col("_band").alias("_rb"), F.col("_key").alias("_rk"),
-        F.col("corpus_id").alias("id_b"),
-    )
-    cand = (
-        left.join(
-            right,
-            (left["_lb"] == right["_rb"]) & (left["_lk"] == right["_rk"])
-            & (left["id_a"] < right["id_b"]),
-        )
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sh_a = index_shingles.select(
-        F.col("corpus_id").alias("id_a"), F.col("_sh_c").alias("_sh_a")
-    )
-    sh_b = index_shingles.select(
-        F.col("corpus_id").alias("id_b"), F.col("_sh_c").alias("_sh_b")
-    )
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size(F.array_union("_sh_a", "_sh_b"))
-    return (
-        cand.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            # NULL on empty-vs-empty sentinel collisions — ANSI 0/0 would
-            # abort the job; see functions.hashing.jaccard_verify
-            jaccard_verify(inter, union).alias("jac"),
-        )
-        .filter(F.col("jac") >= threshold)
+    from a stored index — no text needed: the self-pair core of
+    :func:`syncquill_spark.operators.dedup.minhash_lsh_pairs` over the
+    persisted rows. Output contract matches that operator recomputing
+    from text — the identity that makes a persisted index trustworthy
+    after any append (``merge_text_minhash_index``)."""
+    return minhash_self_pairs(
+        index_keys, _index_shingles(index_shingles), "corpus_id", threshold
     )
 
 
@@ -274,29 +162,18 @@ def stream_text_near_dups(
     stream_drop_seen_text and the text sibling of
     stream_embedding_near_dups.
 
-    The stream side computes its shingles + signature per ROW (no
+    The stream side is keyed per ROW (the builder's streaming form: no
     aggregation, no state store); candidates come from the
     stream-static (band, key) equi-join; the verify joins the corpus
     shingle arrays back by id. Matches repeat per colliding band —
     dedupe per batch downstream (same contract as the vector
     variant)."""
-    keyed, sh = _row_minhash(stream, id_col, text_col, k, n_perm, bands)
-    s_keys = keyed.withColumnRenamed(id_col, "stream_id")
-    s_sh = sh.select(F.col(id_col).alias("stream_id"), F.col("_sh").alias("_sh_s"))
-    cand = s_keys.join(index_keys, ["_band", "_key"]).select("stream_id", "corpus_id")
-    inter = F.size(F.array_intersect("_sh_s", "_sh_c"))
-    union = F.size(F.array_union("_sh_s", "_sh_c"))
-    return (
-        cand.join(s_sh, "stream_id")
-        .join(index_shingles, "corpus_id")
-        .select(
-            "stream_id",
-            "corpus_id",
-            # NULL on empty-vs-empty sentinel collisions — ANSI 0/0 would
-            # abort the job; see functions.hashing.jaccard_verify
-            jaccard_verify(inter, union).alias("jac"),
-        )
-        .filter(F.col("jac") >= threshold)
+    keys, sh = minhash_band_keys(stream, id_col, text_col, k, n_perm, bands)
+    return minhash_cross_pairs(
+        keys, sh, id_col, index_keys, _index_shingles(index_shingles), "corpus_id",
+        threshold, per_band=True,
+    ).select(
+        F.col("id_new").alias("stream_id"), F.col("id_corpus").alias("corpus_id"), "jac"
     )
 
 

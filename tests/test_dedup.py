@@ -199,36 +199,22 @@ def test_ngram_jaccard_matches_naive(spark, texts):
 @settings(max_examples=6, deadline=None)
 @given(texts=_doc_strategy())
 def test_minhash_signature_matches_pure_python(spark, texts):
-    """Spark's explode+groupBy MinHash == a direct python recomputation
-    with the same permutations and md5-derived hashes."""
+    """The MinHash key builder's (id, band, key) rows == a direct python
+    recomputation with the same permutations, md5-derived hashes and
+    band layout."""
     import hashlib
 
-    from pyspark.sql import functions as F
+    from syncquill_spark.functions.hashing import HASH_PRIME, minhash_permutations
+    from syncquill_spark.operators.dedup import minhash_band_keys
 
-    from syncquill_spark.functions.hashing import (
-        HASH_PRIME,
-        minhash_permutations,
-        portable_hash60,
-        word_shingles,
-    )
-
-    perms = minhash_permutations(8)
+    n_perm, bands = 8, 4
+    r = n_perm // bands
+    perms = minhash_permutations(n_perm)
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    ex = df.select(
-        "doc_id", F.explode_outer(F.array_distinct(word_shingles("text", 3))).alias("_s")
-    ).withColumn("_h", portable_hash60(F.col("_s")) % HASH_PRIME)
-    sigs = ex.groupBy("doc_id").agg(
-        *[
-            F.coalesce(
-                F.min((F.lit(a) * F.col("_h") + F.lit(b)) % HASH_PRIME),
-                F.lit(HASH_PRIME).cast("long"),
-            ).alias(f"m{j}")
-            for j, (a, b) in enumerate(perms)
-        ]
-    )
-    got = {r["doc_id"]: [r[f"m{j}"] for j in range(8)] for r in sigs.collect()}
+    keys, _ = minhash_band_keys(df, k=3, n_perm=n_perm, bands=bands)
+    got = {(row["doc_id"], row["_band"]): row["_key"] for row in keys.collect()}
 
     def py_sig(text):
         toks = text.strip().split()
@@ -242,8 +228,49 @@ def test_minhash_signature_matches_pure_python(spark, texts):
             for a, b in perms
         ]
 
+    want = {}
     for i, t in enumerate(texts):
-        assert got[i] == py_sig(t), f"doc {i}: {t!r}"
+        sig = py_sig(t)
+        for bi in range(bands):
+            want[(i, bi)] = ",".join(str(m) for m in sig[bi * r:(bi + 1) * r])
+    assert got == want
+
+
+def test_minhash_signature_forms_emit_identical_keys(spark):
+    """The grouped (batch) and per-row (stream) signature forms emit the
+    same (id, _band, _key) rows — sub-k, empty, whitespace-only and
+    null-text docs included (all carry the sentinel signature). This
+    identity is what lets minhash_band_keys pick the form from
+    df.isStreaming alone: a stream gate keys exactly like the batch
+    index it probes."""
+    from syncquill_spark.operators.dedup import _band_keys, minhash_band_keys
+
+    base = "the quick brown fox jumps over the lazy dog"
+    docs = spark.createDataFrame(
+        [
+            (1, base),
+            (2, base.replace("lazy", "sleepy")),
+            (3, "a a a a a a"),  # repeated shingle
+            (4, "two words"),  # sub-k
+            (5, ""),  # empty
+            (6, "   "),  # whitespace only
+            (7, None),  # null text
+        ],
+        "doc_id long, text string",
+    )
+    _, sh = minhash_band_keys(docs, k=3, n_perm=32, bands=8)
+
+    def rows(per_row):
+        return sorted(
+            tuple(r)
+            for r in _band_keys(sh, "doc_id", 32, 8, per_row=per_row).collect()
+        )
+
+    grouped, per_row = rows(False), rows(True)
+    assert len(grouped) == 7 * 8
+    assert grouped == per_row
+    sentinel = {k for i, _, k in grouped if i in (4, 5, 6, 7)}
+    assert len(sentinel) == 1  # every sub-k doc shares the P signature
 
 
 @settings(max_examples=6, deadline=None)
@@ -532,8 +559,8 @@ def test_migrated_persists_release_between_batches(spark, docs):
     new = docs.filter("doc_id % 2 = 1")
     corpus = docs.filter("doc_id % 2 = 0")
     minhash_lsh_pairs_against(new, corpus, threshold=0.5).count()
-    # 2 tracked intermediates: the tagged-union shingle frame and the
-    # band-bucket frame feeding both filtered join sides
+    # 2 tracked intermediates: the key builder runs once per side and
+    # persists that side's shingle frame
     assert release_cached_intermediates() == 2
 
     # r11 verdict #2 (executed r12): the self-join variant's two sites
@@ -582,7 +609,9 @@ def test_minhash_short_docs_do_not_crash(spark):
 def test_minhash_gates_short_docs_do_not_crash(spark):
     """The same sentinel collision at the ingest gates: an empty batch
     doc against a corpus holding an empty doc crashed every *_against
-    / from-index / stream-twin path; all five sites share the guard."""
+    / from-index / stream-twin path. All of them share one verify tail
+    (operators.dedup._jaccard_verified) and its guard; this pins each
+    public entry point."""
     from syncquill_spark.operators.dedup import minhash_lsh_pairs_against
     from syncquill_spark.streaming.text_dedup import (
         build_text_minhash_index,

@@ -7,10 +7,11 @@ from pyspark.sql import functions as F
 
 from syncquill_spark.functions.hashing import (
     HASH_PRIME,
+    minhash_from_hashes,
     minhash_permutations,
-    minhash_signature,
     portable_hash60,
     rolling_fingerprint,
+    shingle_hashes,
     word_shingles,
 )
 
@@ -35,7 +36,8 @@ def test_minhash_signature_shape_and_containment(spark):
         [("x", "a b c d e f g h",), ("y", "a b c d e f g h",), ("z", "q r s t u v w x",)],
         "id string, s string",
     )
-    sig = df.select("id", minhash_signature(word_shingles("s", 3), 16).alias("sig"))
+    hashes = df.select("id", shingle_hashes(word_shingles("s", 3)).alias("h"))
+    sig = hashes.select("id", minhash_from_hashes(F.col("h"), 16).alias("sig"))
     rows = {r["id"]: r["sig"] for r in sig.collect()}
     assert len(rows["x"]) == 16
     assert rows["x"] == rows["y"]  # identical docs, identical signatures

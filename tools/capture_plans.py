@@ -20,12 +20,17 @@ from syncquill_spark import get_spark  # noqa: E402
 from syncquill_spark.plans import QUERIES  # noqa: E402
 
 
+USAGE = "usage: python tools/capture_plans.py [--round rNN] <suffix> query [query ...]"
+
+
 def main() -> None:
     argv = sys.argv[1:]
     rnd = "r17"
-    if argv and argv[0] == "--round":
-        rnd = argv[1]
-        argv = argv[2:]
+    if argv[:1] == ["--round"]:
+        rnd, argv = (argv[1] if len(argv) > 1 else ""), argv[2:]
+    if not rnd or len(argv) < 2:
+        print(USAGE, file=sys.stderr)
+        sys.exit(2)
     suffix = argv[0]
     names = argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -23,7 +23,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -63,9 +62,7 @@ def main() -> None:
 
     corpus = scaled_corpus(spark, sf_dir, m)
     for name, fn in ops.items():
-        t0 = time.time()
         secs, rows = probe(name, fn, corpus)
-        del t0
         print(
             json.dumps(
                 {
