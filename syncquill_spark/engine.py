@@ -11,6 +11,7 @@ Mirrors main() at syncquill.py:217-239:
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,12 +58,13 @@ def sync(
     report = ""
     if n:
         # The reference prints FULL row values for added/deleted rows
-        # (syncquill.py:199-206); fetch just those rows (keyed filter on
-        # a change-set-sized key list — never a full-table collect).
-        # Both collects are capped at REPORT_LIMIT, matching the report
-        # renderer's own cap, so a pathological change set (e.g. a full
-        # reload that deletes every row) cannot pull the whole table to
-        # the driver.
+        # (syncquill.py:199-206); fetch just those rows with a broadcast
+        # semi-join against a change-set-sized key list (never a
+        # full-table collect). Both collects are capped at REPORT_LIMIT,
+        # matching the report renderer's own cap, so a pathological
+        # change set (e.g. a full reload that deletes every row) cannot
+        # pull the whole table to the driver, and the broadcast side
+        # stays bounded at any table size.
         rows_by_key = _rows_for_keys(
             src, _keys_of(changes, "extra_row"), key
         ) | _rows_for_keys(tgt, _keys_of(changes, "del_row"), key)
@@ -94,11 +96,21 @@ def _keys_of(changes: DataFrame, change_type: str) -> list[str]:
 
 
 def _rows_for_keys(df: DataFrame, keys: list[str], key: str) -> dict[str, list[str]]:
-    """key -> string-normalized full row, for the report's row tables."""
+    """key -> string-normalized full row, for the report's row tables.
+
+    The keys cross Py4J once, as one JSON string literal that the JVM
+    explodes into a one-column relation; ``df`` is left-semi-joined to
+    it with a broadcast. An ``isin`` list would cost several Py4J round
+    trips per key and put every key into the plan as its own literal."""
     if not keys:
         return {}
+    wanted = df.sparkSession.range(1).select(
+        F.explode(F.from_json(F.lit(json.dumps(keys)), "array<string>")).alias("__k")
+    )
     rows = (
-        df.filter(F.col(key).cast("string").isin(keys))
+        df.join(
+            F.broadcast(wanted), df[key].cast("string") == wanted["__k"], "left_semi"
+        )
         .select([F.col(c).cast("string").alias(c) for c in df.columns])
         .collect()
     )

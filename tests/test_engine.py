@@ -3,6 +3,8 @@ the report sink and the sheets grid adapter."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -88,9 +90,103 @@ def test_report_collect_is_capped(spark, tmp_path):
         result = sync(spark, ParquetTable(sp), ParquetTable(tp), dry_run=True)
         assert result.n_changes == 501  # 500 deletes + 1 insert
         # the rendered "Deleted rows" table is capped, not 500 rows
-        assert result.report.count("| Old") <= eng.REPORT_LIMIT
+        old_rows = [ln for ln in result.report.splitlines() if ln.startswith("| Old")]
+        assert 0 < len(old_rows) <= eng.REPORT_LIMIT
+        # and every rendered deleted row carries its fetched payload,
+        # not the key followed by blanks
+        for ln in old_rows:
+            cells = [c.strip() for c in ln.strip("|").split("|")]
+            assert cells[0] == "Old" and cells[1].isdigit() and cells[2] == "x", ln
     finally:
         eng.REPORT_LIMIT = old_limit
+
+
+@contextlib.contextmanager
+def _job_group(spark, group):
+    """Tag the Spark jobs the block runs; yields a callable returning
+    their ids."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+# keys the JSON key literal must carry through unchanged
+AWKWARD_KEYS = ["it's", 'say "hi"', "back\\slash", "a,b", "[1]", "]", "two words",
+                " pad ", "naïve café", "日本語", "smile \U0001F600"]
+
+
+@pytest.mark.parametrize("key_type", ["long", "string"])
+def test_rows_for_keys_matches_python_filter(spark, key_type):
+    """_rows_for_keys equals the dict built in Python from df.collect():
+    awkward characters survive the JSON key literal, a missing key and a
+    repeated key change nothing, and a null-keyed row never matches."""
+    from syncquill_spark.engine import _rows_for_keys
+
+    if key_type == "long":
+        data = [(i, f"n{i}", i * 10) for i in range(1, 8)] + [(None, "nullkey", 0)]
+    else:
+        data = [(k, f"n{i}", i) for i, k in enumerate(AWKWARD_KEYS)]
+        data += [("1", "one", None), (None, "nullkey", 0)]
+    df = spark.createDataFrame(data, f"k {key_type}, name string, n long")
+    keys = AWKWARD_KEYS + ["1", "3", "7", "3", "not-there", "99", "None", "null"]
+
+    wanted = set(keys)
+    expected = {
+        str(r["k"]): [("" if r[c] is None else str(r[c])) for c in df.columns]
+        for r in df.collect()
+        if r["k"] is not None and str(r["k"]) in wanted
+    }
+    got = _rows_for_keys(df, keys, "k")
+    assert got == expected
+    assert len(expected) == (3 if key_type == "long" else len(AWKWARD_KEYS) + 1)
+
+
+def test_rows_for_keys_empty_runs_no_job(spark):
+    from syncquill_spark.engine import _rows_for_keys
+
+    df = spark.createDataFrame([("1", "a")], "k string, v string")
+    with _job_group(spark, "rows-for-keys-nonempty") as jobs:
+        assert _rows_for_keys(df, ["1"], "k") == {"1": ["1", "a"]}
+        assert jobs()  # the probe sees jobs when there are some
+    with _job_group(spark, "rows-for-keys-empty") as jobs:
+        assert _rows_for_keys(df, [], "k") == {}
+        assert jobs() == []
+
+
+def test_sync_resolves_trace_hooks_at_call_time(spark, tables, monkeypatch):
+    """perfbench's traced runs swap engine._keys_of and
+    engine._rows_for_keys for counting wrappers by name; sync must look
+    both up as module globals at call time, with a list and a dict as
+    their results."""
+    import syncquill_spark.engine as eng
+
+    calls = {"_keys_of": [], "_rows_for_keys": []}
+    orig_keys_of, orig_rows_for_keys = eng._keys_of, eng._rows_for_keys
+
+    def keys_of(changes, change_type):
+        out = orig_keys_of(changes, change_type)
+        calls["_keys_of"].append(out)
+        return out
+
+    def rows_for_keys(df, keys, key):
+        out = orig_rows_for_keys(df, keys, key)
+        calls["_rows_for_keys"].append(out)
+        return out
+
+    monkeypatch.setattr(eng, "_keys_of", keys_of)
+    monkeypatch.setattr(eng, "_rows_for_keys", rows_for_keys)
+    source, target = tables
+    result = eng.sync(spark, source, target, dry_run=True)
+    assert result.n_changes == 4
+    assert len(calls["_keys_of"]) == 2 and len(calls["_rows_for_keys"]) == 2
+    assert all(type(out) is list for out in calls["_keys_of"])
+    assert all(type(out) is dict for out in calls["_rows_for_keys"])
+    # one added row (slno 4) and one deleted row (slno 3), fetched whole
+    assert sorted(map(len, calls["_rows_for_keys"])) == [1, 1]
 
 
 def test_sync_dry_run_leaves_target(spark, tables):
