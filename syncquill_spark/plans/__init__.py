@@ -145,6 +145,18 @@ _ALL_ORACLES = {**_CORE_ORACLES, **EXT_ORACLES}
 #      plans (normalized explain text identical). All five changed
 #      rows verified hash-identical at sf0.001/0.01/0.1 and are NOT in
 #      the 42 below, so they join the r18 mandatory leads.
+#  (3) Driver-side connected components (operators/clusters.py):
+#      graphs of at most DRIVER_SOLVE_MAX_EDGES symmetrized edges are
+#      pulled as Arrow and solved in numpy (min-label hooking + pointer
+#      jumping); larger graphs run the unchanged distributed loop.
+#      Same min-node-id labels, same NULL-edge drop. Changed plans:
+#      the four CC-backed rows dedup_clusters, dedup_apply,
+#      dedup_cluster_stats and curation_leakage_split (the cluster map
+#      is now a local relation instead of the loop's checkpoint). No
+#      other registry row calls connected_components or the training
+#      export sink. All four verified hash-identical at
+#      sf0.001/0.01/0.1 (tools/verify_local.py PASS). All four are
+#      r16-green and NOT in the 42 below.
 #  Slot-free maintenance this round (no plan expression changes —
 #  the r15/r16 precedent): session default
 #  spark.sql.files.openCostInBytes 4MB -> 256KB (env-overridable),
@@ -173,10 +185,14 @@ _ALL_ORACLES = {**_CORE_ORACLES, **EXT_ORACLES}
 # text_quality_rules, text_readability, text_segment_dedup,
 # text_sentences_udtf, text_term_stats, text_token_counts.
 # r18 capacity check: 42 staleness-2 + any deviation rows recorded
-# above that are NOT already in the 42 (the 5 MinHash rows of (2)) +
-# 0 registrations (frozen) = 47 mandatory, leaving 3 fill slots — the steady 42+8
-# rotation resumes provided deviations stay inside the r15-green
-# cohort (re-check this arithmetic when recording each deviation).
+# above that are NOT already in the 42 (the 5 MinHash rows of (2) and
+# the 4 CC rows of (3)) + 0 registrations (frozen) = 51 > 50. So three
+# CC rows (dedup_apply, dedup_cluster_stats, curation_leakage_split)
+# take the last 3 r18 slots (50 mandatory, 0 fill) and dedup_clusters
+# leads the r19 window instead: it is r16-green, so skipping r18
+# leaves it at staleness 2, inside the rule, and its
+# connected_components call is the same driver solve that
+# dedup_cluster_stats re-verifies in r18.
 # The 50 r16-green rows not in this window rotate out at staleness 1.
 # Registry 142 — frozen, no change.
 #

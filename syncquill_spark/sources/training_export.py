@@ -23,9 +23,20 @@ sorts (no global sort — `deterministic_shuffle`'s contract), then a
 write with no further movement: rows arrive at the writer already in
 (shard, pos) order, so FileFormatWriter's partition-sort requirement
 is met without re-sorting and each shard's file streams out
-sequentially. The manifest aggregation is n_shards rows. At 100 TB
-pick n_shards so a shard is a few GB — the permutation quality does
-not depend on it.
+sequentially. At 100 TB pick n_shards so a shard is a few GB — the
+permutation quality does not depend on it.
+
+One upstream pass: the caller's frame (often a long lazy pipeline —
+ingest, a pandas UDF, dedup joins, quality rules, a mix window) is
+evaluated once, by the write. The manifest's stats are then read back
+from the staged shard files with the same aggregation
+``read_training_shards(verify=True)`` runs (``_shard_stats``), and an
+empty corpus shows as a staging area with no ``shard=`` directory. So
+the manifest describes the bytes on disk rather than a recomputation
+of the upstream pipeline, and stays true even if that pipeline is
+nondeterministic. Sizing by ``tokens_per_shard`` costs one more
+upstream pass: the token total must be known before rows are assigned
+to shards.
 
 Reference: /root/reference/syncquill.py has no export surface (its
 sink is a BigQuery table, syncquill.py:131-146); this is EXT-tier
@@ -66,6 +77,35 @@ def _order_fingerprint() -> F.Column:
     ).cast("long")
 
 
+def _shard_stats(frame: DataFrame, id_col: str) -> tuple[dict, int]:
+    """Per-shard stats of an export's ``data/`` frame, as the manifest
+    stores them (``{str(shard): {n_docs, n_tokens, fingerprint}}``),
+    and the number of documents with a NULL token count."""
+    stats = (
+        frame.select("shard", "pos", F.col(id_col).alias("_exp_id"), "n_tokens")
+        .groupBy("shard")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("n_tokens").cast("long").alias("n_tokens"),
+            F.count(F.when(F.col("n_tokens").isNull(), F.lit(1)))
+            .cast("long")
+            .alias("n_null"),
+            _order_fingerprint().alias("fingerprint"),
+        )
+        .collect()
+    )
+    shards = {
+        str(int(r.shard)): {
+            "n_docs": int(r.n_docs),
+            # SUM of only NULLs is NULL; the caller refuses those docs
+            "n_tokens": int(r.n_tokens or 0),
+            "fingerprint": int(r.fingerprint),
+        }
+        for r in sorted(stats, key=lambda r: int(r.shard))
+    }
+    return shards, sum(int(r.n_null) for r in stats)
+
+
 def write_training_shards(
     df: DataFrame,
     path: str,
@@ -86,9 +126,10 @@ def write_training_shards(
     or ``tokens_per_shard`` (the deployment knob: n_shards =
     ceil(total_tokens / target), hash assignment balances shards in
     expectation — at 100 TB "a shard is a few GB" is a token budget,
-    not a count). An empty corpus is refused: a 0-doc release is
-    always an upstream bug, and the parquet sink would write an
-    unreadable schema-less directory. A document whose token count is
+    not a count; it costs one extra pass over ``df`` for the total).
+    An empty corpus is refused: a 0-doc release is always an upstream
+    bug, and the parquet sink would write an unreadable schema-less
+    directory. A document whose token count is
     NULL (NULL text, or a NULL in ``token_col``) is refused the same
     way: SUM skips NULLs and the verify gate recomputes the same SUM,
     so such a doc would ride into the release uncounted and still
@@ -114,8 +155,6 @@ def write_training_shards(
         n_shards = max(1, -(-int(total) // tokens_per_shard))
     if n_shards <= 0:
         raise ValueError(f"n_shards must be positive, got {n_shards}")
-    if df.isEmpty():
-        raise ValueError("refusing to export an empty corpus")
     assigned = deterministic_shuffle(
         df.select(
             F.col(id_col).alias("_exp_id"),
@@ -133,6 +172,7 @@ def write_training_shards(
         "shard", "pos"
     )
     staging = f"{path}.__staging_{uuid.uuid4().hex[:8]}"
+    data = os.path.join(staging, "data")
     os.makedirs(staging)
     try:
         (
@@ -143,19 +183,13 @@ def write_training_shards(
                 "n_tokens",
             )
             .write.partitionBy("shard")
-            .parquet(os.path.join(staging, "data"))
+            .parquet(data)
         )
-        stats = (
-            assigned.groupBy("shard")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("n_tokens").cast("long").alias("n_tokens"),
-                F.count(F.when(F.col("n_tokens").isNull(), F.lit(1)))
-                .cast("long")
-                .alias("n_null"),
-                _order_fingerprint().alias("fingerprint"),
-            )
-            .collect()
+        # an empty input writes no partition directory at all
+        if not any(d.startswith("shard=") for d in os.listdir(data)):
+            raise ValueError("refusing to export an empty corpus")
+        shards, null_docs = _shard_stats(
+            df.sparkSession.read.parquet(data), id_col
         )
         # a NULL token count (NULL text, or a NULL in a caller-supplied
         # token_col) would ship a document the manifest cannot account:
@@ -164,7 +198,6 @@ def write_training_shards(
         # inside — the silent-wrong-release shape this sink exists to
         # rule out. Refuse diagnosably instead (before the atomic swap:
         # the target is never touched).
-        null_docs = sum(int(r.n_null) for r in stats)
         if null_docs:
             raise ValueError(
                 f"refusing to export: {null_docs} document(s) have a "
@@ -173,14 +206,6 @@ def write_training_shards(
                 + "); a release manifest must account every document — "
                 "filter or repair these rows upstream"
             )
-        shards = {
-            int(r.shard): {
-                "n_docs": int(r.n_docs),
-                "n_tokens": int(r.n_tokens),
-                "fingerprint": int(r.fingerprint),
-            }
-            for r in stats
-        }
         manifest = {
             "n_shards": n_shards,
             "salt": salt,
@@ -189,7 +214,7 @@ def write_training_shards(
             "token_unit": token_col or "whitespace",
             "total_docs": sum(s["n_docs"] for s in shards.values()),
             "total_tokens": sum(s["n_tokens"] for s in shards.values()),
-            "shards": {str(k): shards[k] for k in sorted(shards)},
+            "shards": shards,
         }
         with open(os.path.join(staging, _MANIFEST), "w") as fh:
             json.dump(manifest, fh, sort_keys=True)
@@ -217,41 +242,17 @@ def read_training_shards(
         manifest = json.load(fh)
     frame = spark.read.parquet(os.path.join(path, "data"))
     if verify:
-        id_col = manifest["id_col"]
-        stats = (
-            frame.select(
-                "shard", "pos", F.col(id_col).alias("_exp_id"), "n_tokens"
-            )
-            .groupBy("shard")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("n_tokens").cast("long").alias("n_tokens"),
-                F.count(F.when(F.col("n_tokens").isNull(), F.lit(1)))
-                .cast("long")
-                .alias("n_null"),
-                _order_fingerprint().alias("fingerprint"),
-            )
-            .collect()
-        )
+        got, null_docs = _shard_stats(frame, manifest["id_col"])
         # a NULL token count is invisible to the SUM comparison below
         # (the writer refuses them since r15, but a tampered or legacy
         # release could still carry one) — an uncounted doc must fail
         # the integrity gate, not slide through it
-        null_docs = sum(int(r.n_null) for r in stats)
         if null_docs:
             raise ValueError(
                 f"training export at {path!r} fails verification: "
                 f"{null_docs} document(s) have a NULL token count, "
                 "which the manifest cannot account"
             )
-        got = {
-            str(int(r.shard)): {
-                "n_docs": int(r.n_docs),
-                "n_tokens": int(r.n_tokens),
-                "fingerprint": int(r.fingerprint),
-            }
-            for r in stats
-        }
         if got != manifest["shards"]:
             bad = {
                 k

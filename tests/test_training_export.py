@@ -27,7 +27,8 @@ def _docs(spark, n=200):
 def test_export_round_trip_matches_shuffle_assignment(spark, tmp_path):
     """Read-back equals the input rows with exactly
     deterministic_shuffle's (shard, pos) assignment, per-shard pos is
-    contiguous from 1, and token counts are the whitespace counts."""
+    contiguous from 1, token counts are the whitespace counts, and the
+    returned manifest equals what verify=True recomputes."""
     from syncquill_spark.operators.curation import deterministic_shuffle
 
     docs = _docs(spark)
@@ -49,6 +50,7 @@ def test_export_round_trip_matches_shuffle_assignment(spark, tmp_path):
     for shard, rows in manifest["shards"].items():
         pos = sorted(r.pos for r in frame.filter(F.col("shard") == int(shard)).collect())
         assert pos == list(range(1, rows["n_docs"] + 1)), shard
+        assert rows["n_tokens"] == 3 * rows["n_docs"], shard
 
 
 def test_export_one_ordered_file_per_shard(spark, tmp_path):
@@ -192,3 +194,43 @@ def test_export_manifest_invariants_property(spark, tmp_path):
         read_training_shards(spark, p, verify=True)
 
     prop()
+
+
+def test_export_evaluates_each_input_row_once(spark, tmp_path):
+    """The write is the only pass over the caller's frame: an
+    accumulator-counting UDF on the input text ticks once per row.
+    The manifest is read back from the staged files, and there is no
+    separate emptiness probe."""
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(text):
+        calls.add(1)
+        return text
+
+    docs = _docs(spark, n=150).withColumn("text", counted("text"))
+    manifest = write_training_shards(docs, str(tmp_path / "once"), n_shards=4)
+    assert manifest["total_docs"] == 150
+    assert calls.value == 150
+
+
+def test_export_refusals_leave_no_target_or_staging(spark, tmp_path):
+    """An empty corpus and a NULL token count are refused with their
+    messages; neither leaves the target nor a staging directory, and a
+    refused overwrite keeps the previous release intact."""
+    empty = _docs(spark).filter(F.col("doc_id") < 0)
+    with pytest.raises(ValueError, match="refusing to export an empty corpus"):
+        write_training_shards(empty, str(tmp_path / "e"), n_shards=2)
+    assert os.listdir(tmp_path) == []
+
+    p = str(tmp_path / "rel")
+    first = write_training_shards(_docs(spark, n=40), p, n_shards=2)
+    nulled = _docs(spark, n=40).withColumn(
+        "text", F.when(F.col("doc_id") != 3, F.col("text"))
+    )
+    with pytest.raises(ValueError, match=r"1 document\(s\) have a NULL token count"):
+        write_training_shards(nulled, p, n_shards=2)
+    with pytest.raises(ValueError, match="empty corpus"):
+        write_training_shards(empty, p, n_shards=2)
+    assert os.listdir(tmp_path) == ["rel"]
+    assert read_training_shards(spark, p, verify=True)[1] == first
