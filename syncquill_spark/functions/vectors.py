@@ -87,14 +87,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     )
 
 
-def _stack_f64(series):
-    """(n, dim) float64 from an Arrow array column. float32 -> float64
-    widening is exact (same as the fold's x.cast('double'))."""
-    import numpy as np
-
-    return np.stack([np.asarray(e, dtype=np.float64) for e in series])
-
-
 def _stack_f64_masked(a, b=None):
     """(valid, xa, xb): ragged/null-tolerant stacking for the Arrow
     kernels. valid[i] is False when row i is NULL, contains a
@@ -306,6 +298,26 @@ def quantize_int8(a: Column) -> Column:
     )
 
 
+def valid_vector(a: Column, dim: int) -> Column:
+    """True when ``a`` is a usable ``dim``-length embedding: not NULL,
+    exactly ``dim`` components, each finite and non-NULL, and not all
+    zero (no direction, so no cell and no cosine); False otherwise.
+    Built-in array functions only — no per-element lambda, so this
+    stays off the interpreted HOF path. Spark orders NaN above +inf, so
+    ``array_max < inf`` rejects NaN too; ``array_contains`` is NULL
+    exactly when an element is NULL (+inf is already excluded)."""
+    inf = F.lit(float("inf"))
+    hi, lo = F.array_max(a), F.array_min(a)
+    return F.coalesce(
+        (F.size(a) == dim)
+        & (hi < inf)
+        & (lo > -inf)
+        & ((hi != 0.0) | (lo != 0.0))
+        & ~F.array_contains(a, inf),
+        F.lit(False),
+    )
+
+
 # Perf notes (measured, don't revisit):
 # - Unrolling a known-dim dot into an explicit element_at sum chain to
 #   escape interpreted higher-order evaluation is ~7x SLOWER than the
@@ -323,10 +335,15 @@ def quantize_int8(a: Column) -> Column:
 def subtract_arrow(a, b):
     """Element-wise a - b over array columns (float widened to double
     first, like every kernel here). Each element is ONE IEEE subtract —
-    no fold, so no ordering concerns; exact in any engine."""
+    no fold, so no ordering concerns; exact in any engine. NULL /
+    ragged / non-finite pairs yield NULL (see _stack_f64_masked)."""
     import pandas as pd
 
     if len(a) == 0:
         return pd.Series([], dtype="object")
-    xa, xb = _stack_f64(a), _stack_f64(b)
-    return pd.Series(list(xa - xb))
+    valid, xa, xb = _stack_f64_masked(a, b)
+    diff = xa - xb
+    # padding is an accumulation no-op only: slice rows back to length
+    return pd.Series(
+        [(diff[i][: len(a[i])] if valid[i] else None) for i in range(len(a))]
+    )

@@ -59,13 +59,12 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
 from syncquill_spark.functions.vectors import (
-    cosine_similarity,
     cosine_similarity_arrow,
-    dot,
     dot_arrow,
     l2_norm,
     squared_l2_arrow,
     unit_vector_arrow,
+    valid_vector,
 )
 from syncquill_spark.operators._cache import tracked_persist
 
@@ -1248,6 +1247,14 @@ def ann_recall(
     )
 
 
+def _pq_valid(corpus: DataFrame, dim: int, vec_col: str) -> DataFrame:
+    """The IVF-PQ family trains, encodes and serves only `valid_vector`
+    rows: a NULL / ragged / non-finite / zero row sampled as a centroid
+    or codeword poisons every score, and one left in the corpus gets
+    codes from its NULL distances and ranks like a real neighbor."""
+    return corpus.filter(valid_vector(F.col(vec_col), dim))
+
+
 def _pq_codebook(
     corpus: DataFrame,
     m_sub: int,
@@ -1443,6 +1450,7 @@ def pq_encode(
     if dim % m_sub != 0:
         raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
     sd = dim // m_sub
+    corpus = _pq_valid(corpus, dim, vec_col)
     if centroids is None:
         frame, fcol = corpus.select(id_col, vec_col), vec_col
         extra: list[str] = []
@@ -1710,6 +1718,7 @@ def ivfpq_topk(
         # silently drop the trailing dims from both codes and LUT and
         # return plausible-but-wrong neighbors instead of an error
         raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
+    corpus = _pq_valid(corpus, dim, vec_col)
     # centroids and codebook are tiny frames with full-corpus lineage
     # and two consumers each (assignment + probe; encoding + LUT):
     # materialize each once instead of re-running the corpus
@@ -1848,6 +1857,7 @@ def ivfpq_build_index(
     if (centroids is None) != (codebook is None):
         raise ValueError("centroids and codebook must be given together")
     sd = dim // m_sub
+    corpus = _pq_valid(corpus, dim, vec_col)
     if centroids is not None:
         cents = centroids.select("cell_id", F.col("centroid").alias("_ucv"))
     else:

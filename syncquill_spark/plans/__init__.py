@@ -4,897 +4,23 @@ Each entry pairs a Spark DataFrame program with an equivalent DuckDB
 SQL oracle (or None for non-SQL-expressible operators, which get a
 rows-only check). ``__spark_entry__.py`` at the repo root re-exports
 this registry for the driver.
+
+The driver re-verifies the FIRST 50 entries in dict order, so the
+registry leads with ``WINDOW`` (``plans/window.py``), which
+``tools/window.py`` derives from the driver's CORRECTNESS artifacts;
+the window policy is documented there.
 """
 
 from syncquill_spark.plans.queries import QUERIES as _CORE_QUERIES
 from syncquill_spark.plans.queries import ORACLES as _CORE_ORACLES
 from syncquill_spark.plans.queries import load_tables
 from syncquill_spark.plans.queries_ext import EXT_QUERIES, EXT_ORACLES
+from syncquill_spark.plans.window import WINDOW
 
 _ALL_QUERIES = {**_CORE_QUERIES, **EXT_QUERIES}
 _ALL_ORACLES = {**_CORE_ORACLES, **EXT_ORACLES}
 
-# The driver's per-round correctness gate verifies the FIRST 50 registry
-# entries in dict order. Policy (round-3 review, extended round-4): any
-# query whose physical plan changed this round MUST sit inside the
-# window — and a change to a SHARED loader/helper counts as touching
-# every caller. Staleness rotation (round-4 verdict, executed every
-# round since): no query outside the window may end the round with a
-# last driver-green row more than 2 rounds old.
-#
-# WINDOW-CAPACITY POLICY (round-8 verdict #2 — decided round 9, while
-# it was still a choice): the 50-slot window and the <=2-round
-# staleness invariant jointly cap the registry at 150 rows (each row
-# needs a green slot every 3 rounds). Standing rules from round 9 on:
-#   1. NET registry growth is capped at 4 rows per round (hard), and
-#      the target steady state is <=142 rows — 8 rows of slack so a
-#      heavy-touch round (shared-helper change fanning out to many
-#      callers) still fits its mandatory cohort.
-#   2. Every round's window is composed, in order: (a) last round's
-#      staleness-2 cohort — ALL of it, first, non-negotiable; (b) new
-#      and plan-touched rows; (c) fill from the staleness-1 cohort,
-#      chosen to flatten the NEXT round's mandatory load (prefer the
-#      sync_* flagship rows and whichever families the round touched).
-#   3. If (a)+(b) would exceed 50, the round pauses registry growth:
-#      new operators land unit-tested only and register the NEXT
-#      round (the round-8 PQ/Lloyd precedent). If (a) ALONE would
-#      exceed 50, that is a structural break — stop and restructure
-#      (split the registry into a stable relational core verified by
-#      the builder's local replica each round + driver slots reserved
-#      for changed/new plans) BEFORE adding anything.
-#   4. The builder's local replica (tools/verify_local.py at sf0.001
-#      AND sf0.01, recorded in VERIFY_LOCAL_r{N}*.txt) remains the
-#      all-rows backstop every round; the driver window is the
-#      trust anchor, the replica is the coverage net.
-#
-# REGISTRY END-STATE (round-10 decision, executing round-9 verdict
-# #3 while the choice still exists — the capacity arithmetic: with
-# the 50-slot window and the <=2-round staleness invariant, every
-# registered row needs a driver-green slot every 3 rounds, so the
-# per-round slack for NEW + plan-TOUCHED rows is 50 - N/3. At the
-# full 147-row drain that slack is 1 — a single shared-helper touch
-# would break the invariant; that IS rule 3's structural break, met
-# proactively rather than discovered):
-#   - The registry is DECLARED FEATURE-COMPLETE AT 142 ROWS. r10
-#     registered 4 (138 total). r11 registered the LAST 4 (executed —
-#     see R11 REGISTRATION below): text_winnowing_spans +
-#     curation_remove_spans (the contaminate -> localize -> act story,
-#     the action path's only verification), text_clf_gate (the
-#     classifier family's only registry row), and curation_lm_buckets
-#     (the CCNet bucket deployment story) — growth is now FROZEN:
-#     142 rows, steady-state slack 50 - 142/3 = 2.6 slots/round plus
-#     whatever touched rows already sit in the mandatory cohort.
-#   - The remaining 5 queued pairs become PERMANENTLY queue-verified:
-#     text_bigram_pruned_gate (variant of registered text_bigram_gate
-#     — delta is one HAVING on the model part), similarity_topk_rerank
-#     (composition of registered similarity_topk_ivfpq + registered
-#     similarity_topk_cosine), curation_temperature_mix (variant of
-#     registered curation_target_mix), text_lines_dedup (near-variant
-#     of registered curation_boilerplate), and text_normalize (pure
-#     projection, no shuffle — the least scale-critical row in the
-#     candidate set). The five live in `plans/queue_permanent.py`;
-#     each keeps its full DuckDB fingerprint pin in
-#     `tests/test_queue_permanent.py` (one parametrized node per
-#     pair), run green every round at both SFs by the local replica
-#     (`tools/verify_local.py --queue`); only the driver's
-#     re-verification is waived, and the waived rows are exactly the
-#     ones whose core semantics the driver ALREADY verifies through
-#     their registered base rows.
-#   - After the freeze, a new operator family lands unit-pinned +
-#     queue-fingerprint-verified, and may enter the registry only by
-#     SWAP (net 0): retire an existing row to the permanent queue in
-#     the same commit, with the swap recorded here.
-#   - Contingency unchanged (rule 3): if any round's mandatory cohort
-#     ALONE exceeds 50, stop and execute the documented split —
-#     stable relational core verified by the local replica each
-#     round, driver slots reserved for changed/new/rotating plans.
-#
-# R11 REGISTRATION — EXECUTED, REGISTRY FROZEN AT 142: the final four
-# (text_winnowing_spans, curation_lm_buckets, curation_remove_spans,
-# text_clf_gate) moved from the r10/r11 queues into queries_ext,
-# completing the contamination detect -> localize -> cut story, the
-# classifier gate, and the CCNet bucket deployment as driver-verified
-# families. The five permanently queue-verified pairs consolidated
-# into `plans/queue_permanent.py` (one parametrized fingerprint test
-# node per pair in tests/test_queue_permanent.py; the old
-# queue_r10/queue_r11 modules are gone). From here, registry entry is
-# by SWAP only (net 0), recorded in this block.
-#
-# Round-17 window, in order (the second OPTIMIZATION round; zero-slack
-# rotation the round-16 capacity check predicted — 50 mandatory, 0 fill):
-#  - the 46 staleness-2 rows (last driver-green r14; re-derived from
-#    CORRECTNESS_r14/r15/r16 before committing this order — 46 == 46
-#    set equality with the round-16 leave-out comment confirmed);
-#  - the 4 documented-deviation rows carried out of round 16
-#    (cdc_scd2_history, curation_pack_sequences,
-#    curation_target_mix_tokens, pipeline_corpus_curation — the
-#    slotless rule-2b changes named in the round-16 block below, all
-#    locally three-SF verified when they landed).
-#  NOTE for the r17 judge: the round-16 verdict's next-round items 2
-#  and 3 state that dedup_cluster_stats and profile_referential "are
-#  in the r17 mandatory cohort" — re-derivation from the CORRECTNESS
-#  artifacts shows they are NOT (both are r16-/r15-green,
-#  staleness 0/1). Any r17 change to those rows therefore follows the
-#  documented-deviation protocol (output-identical only, three-SF
-#  local hash verification, named here as r18 mandatory leads) rather
-#  than riding a window slot.
-#  DOCUMENTED DEVIATIONS this round (rule 2b, zero slack): recorded
-#  here as they land, each output-identical and re-verified
-#  hash-identical at sf0.001/0.01/0.1 before its commit.
-#  (1) profile_referential (r15-green, staleness 1 — already in the
-#      r18 mandatory leads below, so zero extra r18 burden):
-#      referential_orphans now consumes the child ONCE per edge (LEFT
-#      join against the deduped parent keys + a single count/hits
-#      aggregation) instead of two scans stitched by a cross join —
-#      per-edge broadcasts kept (a fully stacked single-join form was
-#      ALSO implemented and measured 1.35x SLOWER locally, so it was
-#      discarded; OPTIMIZATION_r17.md §2). Output verified
-#      hash-identical at all three SFs; scheduled jobs 39 -> 27,
-#      isolated median ~1.2x.
-#  (2) One MinHash-LSH core (operators/dedup.py: minhash_band_keys,
-#      minhash_self_pairs, minhash_cross_pairs): the streaming/
-#      text_dedup.py MinHash functions and minhash_lsh_pairs_against
-#      now compose the same key builder and verify tail as
-#      minhash_lsh_pairs. Changed plans: dedup_incremental and
-#      curation_fuzzy_decontaminate (each side keyed separately
-#      instead of one tagged-union aggregation), pipeline_training_mix
-#      (via fuzzy_decontaminate), storage_index_roundtrip (the new
-#      side takes the grouped signature form instead of the per-row
-#      one) and storage_index_incremental (verify lookups renamed,
-#      same operators). dedup_minhash_lsh and dedup_apply keep their
-#      plans (normalized explain text identical). All five changed
-#      rows verified hash-identical at sf0.001/0.01/0.1 and are NOT in
-#      the 42 below, so they join the r18 mandatory leads.
-#  (3) Driver-side connected components (operators/clusters.py):
-#      graphs of at most DRIVER_SOLVE_MAX_EDGES symmetrized edges are
-#      pulled as Arrow and solved in numpy (min-label hooking + pointer
-#      jumping); larger graphs run the unchanged distributed loop.
-#      Same min-node-id labels, same NULL-edge drop. Changed plans:
-#      the four CC-backed rows dedup_clusters, dedup_apply,
-#      dedup_cluster_stats and curation_leakage_split (the cluster map
-#      is now a local relation instead of the loop's checkpoint). No
-#      other registry row calls connected_components or the training
-#      export sink. All four verified hash-identical at
-#      sf0.001/0.01/0.1 (tools/verify_local.py PASS). All four are
-#      r16-green and NOT in the 42 below.
-#  Slot-free maintenance this round (no plan expression changes —
-#  the r15/r16 precedent): session default
-#  spark.sql.files.openCostInBytes 4MB -> 256KB (env-overridable),
-#  packing tiny-file binaryFile/text ingest dirs into ~parallelism
-#  scan tasks instead of hundreds (guide §6; media roundtrips ~1.8x,
-#  full registry re-verified 142/142 at sf0.001 AND sf0.01 after the
-#  change — split packing is runtime scheduling, not plan shape).
-# Left outside at staleness 2 after this round (the 50-row r15-green
-# cohort minus the 4 round-16 deviation rows filled above = the
-# remaining 42 rows that MUST lead the r18 window; the tripwire test
-# derives the same set from CORRECTNESS_r15/r16 minus this window —
-# 46 r15-green rows absent from the r16 artifact, of which 4 took the
-# deviation slots above):
-# agg_distinct_users_exact, cdc_incremental_agg, curation_domain_quota,
-# curation_redact_pii, curation_target_mix, dedup_exact,
-# dedup_semantic_pairs, dedup_simhash, dedup_simhash_against,
-# dedup_simhash_pairs, dedup_winnowing_against,
-# embedding_label_centroids, embedding_pq_codes, embedding_quantize,
-# funnel_click_purchase, join_asof_signup, join_binned_range,
-# join_excess_inventory, join_range_shipments, profile_documents,
-# profile_referential, similarity_knn_classify, similarity_topk_ivf,
-# storage_simhash_index, storage_versioned_roundtrip,
-# storage_winnowing_index, sync_apply_keyed, sync_diff_keyed,
-# sync_diff_positional, sync_upsert, sync_validate, text_bigram_gate,
-# text_bigram_lm, text_bm25, text_chunk_documents, text_fingerprint,
-# text_quality_rules, text_readability, text_segment_dedup,
-# text_sentences_udtf, text_term_stats, text_token_counts.
-# r18 capacity check: 42 staleness-2 + any deviation rows recorded
-# above that are NOT already in the 42 (the 5 MinHash rows of (2) and
-# the 4 CC rows of (3)) + 0 registrations (frozen) = 51 > 50. So three
-# CC rows (dedup_apply, dedup_cluster_stats, curation_leakage_split)
-# take the last 3 r18 slots (50 mandatory, 0 fill) and dedup_clusters
-# leads the r19 window instead: it is r16-green, so skipping r18
-# leaves it at staleness 2, inside the rule, and its
-# connected_components call is the same driver solve that
-# dedup_cluster_stats re-verifies in r18.
-# The 50 r16-green rows not in this window rotate out at staleness 1.
-# Registry 142 — frozen, no change.
-#
-# Round-16 window, in order (post-freeze maintenance rotation — no
-# registrations, pure staleness rotation + fill):
-#  - the 42 mandatory rows the round-15 verdict names (the full
-#    staleness-2 cohort, last driver-green r13; re-derived from
-#    CORRECTNESS_r13/r14/r15 before committing this order, set
-#    equality with the r15 leave-out comment confirmed — 42 == 42);
-#  - 8 fill, rule 2b first (this round's planned plan changes, named
-#    by the r15 verdict items 3-4):
-#    text_bm25 (r15-green; the BM25 doclens-prune plan change — its
-#    sibling storage_bm25_index is already in the mandatory 42),
-#    dedup_cluster_stats (r15-green), dedup_clusters and
-#    curation_leakage_split (both r14-green/staleness-1) — the three
-#    registered callers of connected_components, whose NULL-endpoint
-#    edge fix (r15 verdict What's-wrong #2, deferred from r15) changes
-#    their plans;
-#    then, after two mid-round rebalances by the OPTIMIZATION pass
-#    (see OPTIMIZATION_r16.md; the r13 fill-rebalance precedent), 5
-#    more rule-2b slots: text_winnowing_spans and curation_remove_spans
-#    (winnowing single-pass rewrite; originally 2c picks, promoted to
-#    2b by that change — both r14-green, so displacing them would
-#    inflate the r17 mandatory cohort), similarity_topk_ivfpq and
-#    storage_ivfpq_index (the ADC array-scoring rewrite — codes
-#    stored/shuffled as one array row per vector, serve-path
-#    aggregation removed; the optimization round's ONE storage-format
-#    change, so both the monolithic and the serve-from-index shape
-#    take slots), and pipeline_training_mix (multi-consumer persist of
-#    the decontaminate->dedup->mix subtree, the pass's largest
-#    measured win, ~1.5x). Displaced to make room, r15-green rows
-#    whose changed machinery keeps strong in-window same-machinery
-#    coverage (the r15 "covered by an in-window row, no deviation"
-#    precedent; all three re-verified hash-identical locally at
-#    sf0.001/0.01/0.1, and all three ride natural staleness — r18
-#    leads): text_bm25 (its sibling storage_bm25_index, mandatory 42,
-#    exercises the SAME doclens-inline scoring through
-#    build/save/append/serve against text_bm25's own oracle twin),
-#    dedup_winnowing_against and storage_winnowing_index (the
-#    fingerprint rewrite they share is driver-verified through
-#    text_winnowing + dedup_winnowing_pairs (mandatory 42) and
-#    text_winnowing_spans + curation_remove_spans (fill); the
-#    concurrent index-part writes through storage_index_roundtrip +
-#    storage_index_incremental (mandatory 42)).
-#    The earlier displacement of the 2c picks curation_lm_buckets and
-#    text_clf_gate to the r17 mandatory leads below stands. (Other
-#    plan-changed rows of the optimization pass already in this
-#    window: text_winnowing, dedup_winnowing_pairs,
-#    storage_index_roundtrip, storage_index_incremental, dedup_apply,
-#    curation_quality_filter; optimization deviations WITHOUT a slot,
-#    documented below: pipeline_corpus_curation, plus the
-#    staleness-2 rows curation_lm_buckets / similarity_ann_recall /
-#    similarity_topk_ivf_refined whose r17-lead status the deviation
-#    protocol would demand anyway.)
-#    Slot-free maintenance planned this round (Python-side,
-#    output-identical for every existing layout, the r15 vec-gate
-#    precedent): BM25's n_buckets STAMPED into its index manifest via
-#    save_index _meta and verified at load with an unpruned-scan
-#    fallback (r15 verdict What's-wrong #1 / ADVICE-promoted
-#    mandatory); ADVICE r15 low items (zorder_key_sql guards,
-#    asof_join docstring contract, vectors HOF norm reuse,
-#    load_embedding_index warnings.warn). Mid-round additions, same
-#    category (driver-side raises that are DEAD CODE for every
-#    registered caller — no plan expression changes, caller census +
-#    sf0.01 hash re-verification before commit): (d) _resolve_bands
-#    refuses max_hamming<0 (previously zero bands slid under the
-#    pigeonhole check and died as a VOID-type AnalysisException — r16
-#    battery probe; all five registered simhash rows re-verified
-#    hash-identical); (e) video_near_pairs refuses
-#    max_frames_per_video<1 driver-side (no registered callers — the
-#    family is queue pair 10); (f) save_index/append_index refuse
-#    part NAMES the walkers classify as bookkeeping (existing parts
-#    all use clean names — the guard is unreachable for them; all
-#    storage_* rows re-verified via the full suite).
-#    DOCUMENTED DEVIATION (rule 2b, no slack — the 50 slots were
-#    committed at rotation): the r16 battery probe found scd2_history
-#    returning partition-layout-dependent VERSION HISTORIES for
-#    observations tied on (key, order) with differing tracked values
-#    (the r15 asof class — probe showed 3 vs 4 versions from the same
-#    stream); fixed with a tracked-struct-ascending tie-break in the
-#    window sort (operators/scd2.py). Its only registered caller
-#    cdc_scd2_history is r15-green and OUTSIDE this window — it
-#    already passes a unique event_id tie_col, so the fixture output
-#    is provably unchanged (re-verified hash-identical at
-#    sf0.001/0.01/0.1 after the fix); per the deviation protocol it
-#    is a MANDATORY r17 lead alongside the staleness cohort below.
-#    SECOND deviation, same handling (the r15 export sink's
-#    NULL-skipping-SUM class, found by auditing the token-budget
-#    operators): pack_sequences / pack_sequences_ffd /
-#    target_mix_tokens let a NULL token count — or a document MISSING
-#    from a caller-supplied counts frame, which the old inner join
-#    silently dropped — ride through their budget sums uncounted; all
-#    three now left-join and refuse NULL counts with a named in-plan
-#    error. Registered callers: curation_pack_ffd is IN this window
-#    (rule 9); curation_pack_sequences and curation_target_mix_tokens
-#    are r15-green OUTSIDE it — both re-verified hash-identical at
-#    sf0.001/0.01/0.1 (fixture has no NULL-text docs) and join
-#    cdc_scd2_history as MANDATORY r17 leads.
-#    FOURTH deviation (optimization pass, same handling):
-#    pipeline_corpus_curation's wrapper now persists its twice- and
-#    thrice-consumed dedup/curated frames (output provably identical —
-#    lineage dedup only; measured ~1.4x; oracle-verified
-#    hash-identical at sf0.001/0.01/0.1) — r15-green, no slot left,
-#    so it joins the r17 mandatory leads. The optimization pass's
-#    other slotless persist-only rows — curation_lm_buckets,
-#    similarity_ann_recall, similarity_topk_ivf_refined — are already
-#    staleness-2 rows in the cohort below (r17 leads regardless), so
-#    the deviation protocol adds no extra r17 burden for them.
-#    curation_lm_buckets took a SECOND output-identical optimization
-#    in the same pass (fused head+tail order-statistic extraction in
-#    quality_value_buckets — _order_stat_cutoff_multi (landed under that name, generalized to N fracs): one sketch, one
-#    region count, one tagged window for both cutoffs; lm_buckets is
-#    its only registered caller) — same handling, re-verified
-#    hash-identical at sf0.001/0.01/0.1 post-change; it was already an
-#    r17 mandatory lead above, so no extra burden.
-# Left outside at staleness 2 after this round (the 50-row r14-green
-# cohort minus the 4 staleness-1 rows filled above = 46 rows that MUST
-# lead the r17 window; the tripwire test derives the same set from
-# CORRECTNESS_r14/r15 minus this window):
-# curation_lm_buckets, text_clf_gate (displaced by the optimization
-# pass's two plan-changed rows — see the fill note above),
-# agg_cube_sales, agg_customer_balance_stats,
-# agg_customer_distribution, agg_forecast_revenue, agg_grouping_sets,
-# agg_important_stock, agg_order_priority, agg_pivot_status,
-# agg_pricing_summary, agg_promo_revenue, agg_quantiles_status,
-# agg_status_sets, agg_supplier_part_types, join_disjunctive_promo,
-# join_large_orders, join_lonely_returned_supplier, join_market_share,
-# join_min_cost_supplier, join_nation_trade, join_priority_lines,
-# join_product_profit, join_returned_items, join_revenue_by_nation,
-# join_salted_revenue, join_shipping_priority, join_small_qty_parts,
-# json_events_extract, multimodal_audio_decode, multimodal_decode,
-# multimodal_features, multimodal_media_stats, scalar_functions,
-# setop_customers_without_orders, setop_idle_rich_customers,
-# setop_repeat_customers, similarity_ann_recall,
-# similarity_topk_cosine, similarity_topk_ivf_refined,
-# storage_media_ingest_roundtrip, storage_media_wav_roundtrip,
-# subquery_exists_orders, text_token_stats, window_top_supplier,
-# window_topk_orders.
-# r17 capacity check: 46 staleness-2 + 4 deviation rows
-# (cdc_scd2_history, curation_pack_sequences,
-# curation_target_mix_tokens, pipeline_corpus_curation — the
-# slotless rule-2b changes above, all locally three-SF verified) +
-# 0 registrations (frozen) = 50 mandatory, leaving 0 fill slots —
-# at the r14 precedent's ceiling (47+3). Consequence for r17 (the
-# second optimization round): plan changes there must target rows
-# already inside its 50-row mandatory window (which includes the
-# similarity, curation and relational cohorts) or invoke this same
-# documented-deviation protocol. No deviation rows were carried
-# INTO r16 (r15 closed clean).
-# The 50 r15-green rows not in this window rotate out at staleness 1.
-# Registry 142 — frozen, no change.
-#
-# Round-15 window, in order (post-freeze maintenance rotation — no
-# registrations, pure staleness rotation + fill):
-#  - the 49 mandatory rows the round-14 verdict names (re-derived from
-#    CORRECTNESS_r12/r13/r14 before committing this order, set
-#    equality confirmed): the full 45-row staleness-2 cohort (last
-#    driver-green r12 — includes the three sync rows displaced by
-#    r14's rule-2b rebalance) PLUS the 4 documented-deviation rows
-#    from r14 (similarity_knn_classify, similarity_topk_ivf,
-#    storage_ivfpq_index, dedup_semantic_pairs — r13-green but
-#    kernel/guard-touched without a slot; the deviation protocol makes
-#    them mandatory leads here);
-#  - 1 rule-2c fill: storage_versioned_roundtrip (r13-green). Picked
-#    because r14's final commit (485d9e0) added a refusal branch to
-#    the versioned-table hardlink append (sources/parquet.py —
-#    partition trees now error diagnosably instead of conflating
-#    siblings); existing flat layouts were verified locally
-#    bit-identical, but this row is the one registered driver of that
-#    exact code path, so it takes the round's single free slot and
-#    closes the loop with a driver-green row.
-#    One rule-2b change, covered by an IN-WINDOW row (no deviation):
-#    asof_join gains a deterministic tie-break for right rows tied on
-#    (key, ts) — previously last() returned a partition-layout-
-#    dependent answer among differing tied rows (r15 battery find;
-#    real point-in-time feeds contain ties). Its only registered
-#    caller join_asof_signup is in the mandatory 49 above, so this
-#    round's driver run re-verifies it; locally re-verified
-#    hash-identical at all three SFs (the fixture has no tied right
-#    timestamps, so output is unchanged — only the arbitrary choice
-#    is pinned).
-#    Slot-free maintenance this round (no registered plan touched,
-#    verified by caller census before each change): (a) the HOF
-#    `cosine_similarity` gains the same zero-norm→NULL guard as its
-#    Arrow twin (ADVICE r14; the HOF form has ZERO registered callers
-#    — plans use cosine_similarity_arrow exclusively); (b) the
-#    streaming vector gate stamps VEC_GATE_BUCKETS into the persisted
-#    index manifest and verifies it before pruning (ADVICE r14; the
-#    gate module is driven only by tests/ladder/battery, no registry
-#    row); (c) the gate's pruned batch path releases its tracked
-#    persist deterministically (ADVICE r14, same module).
-# Left outside at staleness 2 after this round (the 43-row r13-green
-# cohort minus the one rule-2c pick above = 42 rows that MUST lead the
-# r16 window; the tripwire test derives the same set from
-# CORRECTNESS_r13/r14 minus this window):
-# agg_distinct_users_approx, agg_quantiles_approx_check,
-# agg_rollup_orders, curation_blocklist, curation_boilerplate,
-# curation_decontaminate, curation_eval_k_per_lang,
-# curation_fuzzy_decontaminate, curation_hash_split, curation_pack_ffd,
-# curation_quality_filter, curation_sample_stratified, curation_shuffle,
-# dedup_apply, dedup_embedding_cosine, dedup_embedding_incremental,
-# dedup_incremental, dedup_minhash_lsh, dedup_ngram_jaccard,
-# dedup_winnowing_pairs, embedding_nearest_centroid,
-# events_session_window, events_sessionization, events_sliding_window,
-# events_tumbling_window, join_events_customers, setop_except_all,
-# similarity_topk_lsh, storage_bigram_model, storage_bm25_index,
-# storage_index_incremental, storage_index_roundtrip,
-# storage_text_ingest_roundtrip, storage_zorder_key, text_language_id,
-# text_quality, text_repetition, text_tfidf_terms, text_vocab_coverage,
-# text_winnowing, window_moving_avg, window_running_total.
-# (storage_versioned_roundtrip is the 43rd r13-green row — in THIS
-# window, so it re-greens at r15 and is NOT an r16 mandatory lead.)
-# r16 capacity check: 42 staleness-2 + 0 registrations (frozen) = 42
-# mandatory, leaving 8 fill slots — the steady 42+8 rotation the
-# round-14 comment predicted resumes. No deviation rows carried
-# forward from r15 as of this rotation commit; if a mid-round rule-2b
-# change needs more than the fill slots, apply the documented-
-# deviation protocol (name the slotless touched rows here, verify at
-# all three SFs locally, make them r17 mandatory leads).
-# The 50 r14-green rows not in this window rotate out at staleness 1.
-# Registry 142 — frozen, no change.
-#
-# Round-14 window, in order (post-freeze maintenance rotation — no
-# registrations, pure staleness rotation + fill):
-#  - the 47 rows at staleness 2 (the round-13 verdict names them as
-#    mandatory leads and re-derived the cohort independently, 47/47
-#    match: the 42 rows whose last driver-green is r11 plus the five
-#    r12-green rule-2c picks displaced by r13's two mid-round rule-2b
-#    rebalances — curation_remove_spans, text_clf_gate, dedup_clusters,
-#    curation_leakage_split, text_winnowing_spans; re-derived again
-#    from CORRECTNESS_r11/r12/r13 before committing this order, set
-#    equality confirmed);
-#  - 3 staleness-1 fill, REBALANCED mid-round (rule 2b, the r13
-#    precedent): the ADVICE r13 medium item — a finite all-zero
-#    embedding divides 0/0 in cosine_similarity_arrow, the NaN sorts
-#    above every double, and the r13 isNotNull drop cannot catch it —
-#    is fixed IN the kernel (zero-norm rows mask to NULL,
-#    functions/vectors.py; DuckDB's x/0 is NULL too, so the oracle
-#    agrees by construction). That touches the kernel behind the
-#    float-cosine scoring blocks, so their r13-green registered
-#    callers are rule-2b rows. The 3 slots go to similarity_topk_cosine
-#    (the brute_force_topk block), similarity_topk_ivf_refined (the
-#    ivf_topk block), and similarity_ann_recall (the brute+lsh
-#    composition), displacing the provisional sync_diff_keyed,
-#    sync_apply_keyed, sync_upsert picks (r12-green, staleness 1 at
-#    selection; they rejoin the rotation as r15 mandatory leads).
-#    DOCUMENTED DEVIATION (the verdict's zero-slack contingency):
-#    similarity_knn_classify and similarity_topk_ivf are equally
-#    rule-2b touched but get NO slot this round — 47 + 5 > 50. Their
-#    scoring expressions are the SAME two blocks the three in-window
-#    rows drive (knn_classify composes brute_force_topk verbatim;
-#    topk_ivf is ivf_refined minus the Lloyd refinement), the fixture
-#    contains zero zero-norm embeddings at every SF (verified by
-#    DuckDB scan before commit — outputs provably unchanged), and both
-#    rows re-verified hash-identical in the local driver-protocol
-#    replica at sf0.001/0.01/0.1 after the fix. They are next-window
-#    mandatory alongside the r15 cohort below.
-#    SECOND battery find, same deviation handling: the pytest-wired
-#    battery (r13 verdict #4, executed this round) immediately caught
-#    the initial-centroid sample normalizing without the Lloyd loop's
-#    _mnrm > 0 guard — a sampled zero-norm/NULL embedding ANSI-aborted
-#    every IVF/IVF-PQ/SemDeDup build. Fixed with the same WHEN guard
-#    at both sites (operators/similarity.py _ivf_centroids +
-#    semantic_near_dup_pairs); additionally-touched r13-green rows
-#    storage_ivfpq_index and dedup_semantic_pairs join the deviation
-#    (similarity_topk_ivfpq, the third centroid caller, is r12-green
-#    and already in the r15 mandatory list below). All centroid-path
-#    rows re-verified hash-identical at sf0.01 after the fix; battery
-#    node ivf_pathological pins the regression.
-#    THIRD find, NO window action (dead-code shared-helper touch):
-#    the bucketed vector-gate append==rebuild test caught
-#    index_store's directory walkers treating `_bucket=7` partition
-#    dirs as hidden bookkeeping — _link_tree silently DROPPED the
-#    whole stored part on append and the layout guard was blind, for
-#    any underscore-named partition column. Fixed (_is_bookkeeping:
-#    `key=value` dirs are data). This is a Python-side walker, not a
-#    Spark plan, and NO existing registered part uses an
-#    underscore-named partition column (cell_id/term_bucket), so for
-#    every registered row the function output is bit-identical — the
-#    new branch is unreachable dead code for them. All nine storage_*
-#    rows re-verified hash-identical at sf0.01 after the change;
-#    tests/test_streaming.py pins append==rebuild on the one layout
-#    that exercises the new branch.
-# Left outside at staleness 2 after this round (the full 45-row
-# r12-green cohort — the three sync rows rejoin it after the rule-2b
-# displacement above — plus the 4 deviation rows
-# similarity_knn_classify, similarity_topk_ivf, storage_ivfpq_index,
-# dedup_semantic_pairs, r13-green but kernel/guard-touched without a
-# slot; all 49 MUST lead the r15 window):
-# agg_distinct_users_exact, cdc_incremental_agg, cdc_scd2_history,
-# curation_domain_quota, curation_pack_sequences, curation_redact_pii,
-# curation_target_mix, curation_target_mix_tokens, dedup_cluster_stats,
-# dedup_exact, dedup_semantic_pairs, dedup_simhash, dedup_simhash_against,
-# dedup_simhash_pairs, dedup_winnowing_against,
-# embedding_label_centroids, embedding_pq_codes, embedding_quantize,
-# funnel_click_purchase, join_asof_signup, join_binned_range,
-# join_excess_inventory, join_range_shipments, pipeline_corpus_curation,
-# pipeline_training_mix, profile_documents, profile_referential,
-# similarity_knn_classify, similarity_topk_ivf, similarity_topk_ivfpq,
-# storage_ivfpq_index, storage_simhash_index, storage_winnowing_index,
-# sync_apply_keyed, sync_diff_keyed, sync_diff_positional, sync_upsert,
-# sync_validate,
-# text_bigram_gate, text_bigram_lm,
-# text_bm25, text_chunk_documents, text_fingerprint, text_quality_rules,
-# text_readability, text_segment_dedup, text_sentences_udtf,
-# text_term_stats, text_token_counts.
-# r15 capacity check: 45 staleness-2 + 4 deviation rows + 0
-# registrations (frozen) = 49 mandatory, leaving 1 slot. That is
-# rule 3's warning threshold, not a breach: the bulge is two
-# battery-found latent crashes fixed in one round, every displaced
-# row is locally three-SF verified, and the r16 load drops back to
-# the 50-green-r14 rotation (steady 42 + 8 resumes r16/r17). If r15
-# needs more than its 1 free slot, apply this same documented-
-# deviation protocol rather than widening the window.
-# The 50 r13-green rows not in this window rotate out at staleness 1.
-# Registry 142 — frozen, no change.
-#
-# Round-13 window, in order (post-freeze maintenance rotation — no
-# registrations, pure staleness rotation + fill):
-#  - the 42 rows whose last driver-green is r10 (staleness 2 — the
-#    round-12 verdict names them as mandatory leads and re-derived the
-#    cohort independently, 42/42 match; re-derived again from
-#    CORRECTNESS_r10/r11/r12 before committing this order, set
-#    equality confirmed);
-#  - 8 staleness-1 fill, REBALANCED mid-round when the boundary
-#    battery's ANSI-0/0 fix (jaccard_verify: sentinel-signature
-#    collisions between sub-k-token docs divided 0/0 at the minhash
-#    verify, aborting the job under Spark 4 ANSI; five sites, two
-#    modules) made the minhash callers rule-2b touched rows — the r12
-#    precedent exactly. Rule 2b first: dedup_minhash_lsh, dedup_apply
-#    (minhash_lsh_pairs callers; swapped IN for the 2c picks
-#    curation_remove_spans and text_clf_gate, which rotate out at
-#    staleness 1 and join the r14 mandatory leads), dedup_incremental,
-#    curation_fuzzy_decontaminate (minhash_lsh_pairs_against callers,
-#    already in the fill; storage_index_roundtrip and
-#    storage_index_incremental, the from-index/gate callers, are in
-#    the mandatory 42). The battery's SECOND find rebalanced again:
-#    the vector kernels (functions/vectors.py Arrow folds,
-#    similarity._make_sig_udf/_dotq, the rp/pca projectors) crashed on
-#    NULL or ragged embeddings (np.stack throws — one corrupt row
-#    killed the job) and a NaN embedding silently TOPPED every
-#    desc-ranked top-k (Spark sorts NaN above every double). Kernels
-#    now mask NULL/ragged/non-finite rows to NULL outputs, and the
-#    four top-k ranking blocks (brute/lsh/ivf/exact_rerank) drop NULL
-#    scores BEFORE ranking — a plan change for the top-k rows, so
-#    rule 2b again: similarity_topk_ivf, similarity_topk_ivf_refined,
-#    similarity_ann_recall swap in (similarity_topk_cosine, _lsh, and
-#    similarity_knn_classify are already in the mandatory 42; the
-#    queue's similarity_topk_rerank re-fingerprints locally).
-#    Displaced to make room — plan-IDENTICAL callers held only out of
-#    caution: dedup_clusters, curation_leakage_split,
-#    text_winnowing_spans (they join the r14 mandatory leads; their
-#    compensating control is the full small-SF replica re-run after
-#    each fix, 149/149 both SFs). ngram_jaccard_pairs also changed
-#    (derive the length band from text when the length column is
-#    absent) — registry plans expression-identical (the standard
-#    tables carry n_chars); its most direct caller
-#    dedup_ngram_jaccard keeps the last caution slot.
-# Left outside at staleness 2 after this round (42 r11-green rows
-# untouched, plus curation_remove_spans, text_clf_gate,
-# dedup_clusters, curation_leakage_split, text_winnowing_spans —
-# r12-green 2c fill picks displaced by the two rule-2b rebalances
-# above — they MUST lead the r14 window; 47 rows): agg_cube_sales,
-# agg_customer_balance_stats,
-# agg_customer_distribution, agg_forecast_revenue, agg_grouping_sets,
-# agg_important_stock, agg_order_priority, agg_pivot_status,
-# agg_pricing_summary, agg_promo_revenue, agg_quantiles_status,
-# agg_status_sets, agg_supplier_part_types, curation_leakage_split,
-# curation_lm_buckets,
-# curation_remove_spans, dedup_clusters, join_disjunctive_promo,
-# join_large_orders,
-# join_lonely_returned_supplier, join_market_share,
-# join_min_cost_supplier, join_nation_trade, join_priority_lines,
-# join_product_profit, join_returned_items, join_revenue_by_nation,
-# join_salted_revenue, join_shipping_priority, join_small_qty_parts,
-# json_events_extract, multimodal_audio_decode, multimodal_decode,
-# multimodal_features, multimodal_media_stats, scalar_functions,
-# setop_customers_without_orders, setop_idle_rich_customers,
-# setop_repeat_customers, storage_media_ingest_roundtrip,
-# storage_media_wav_roundtrip, subquery_exists_orders, text_clf_gate,
-# text_token_stats, text_winnowing_spans, window_top_supplier,
-# window_topk_orders.
-# r14 capacity check: 47 mandatory + 0 registrations (frozen) = 47,
-# leaving 3 slots for touched rows + early rotation — tight but fits
-# (the 42 + 8 steady state resumes by r16; the 5-row bulge is the
-# price of re-verifying both boundary-battery fixes' callers this
-# round, and the displaced rows' plans were re-verified locally at
-# all SFs before displacement).
-# The 50 r12-green rows not in this window rotate out at staleness 1.
-# Registry 142 — frozen, no change.
-#
-# Round-12 window, in order (the first post-freeze maintenance
-# rotation — no registrations, pure staleness rotation + fill):
-#  - the 42 rows whose last driver-green is r09 (staleness 2 — the
-#    round-11 verdict names them as mandatory leads and verified the
-#    list set-identical to the true cohort; re-derived again from
-#    CORRECTNESS_r09/r10/r11 before committing this order, set
-#    equality confirmed). These INCLUDE dedup_minhash_lsh and
-#    dedup_apply — the two callers of the minhash_lsh_pairs
-#    tracked_persist migration queued for this round (rule 2b's
-#    touched rows and rule 2a's mandatory cohort coincide here);
-#  - 8 staleness-1 fill: rule-2b touched rows first —
-#    dedup_winnowing_against (its plan path winnowing_matches_against
-#    shares the hub-cap gate factored into _gated_winnowing_matches
-#    this round, ADVICE r11; a shared-helper change counts as
-#    touching every caller) and the four simhash rows dedup_simhash,
-#    dedup_simhash_pairs, dedup_simhash_against, storage_simhash_index
-#    (simhash_fingerprints gained the bits=64 sign-bit fix this round;
-#    the bits=32 plan is expression-identical — touch out of caution,
-#    the r10 precedent; the fifth caller dedup_cluster_stats is in
-#    the mandatory 42) — then rule 2c: sync_apply_keyed, sync_upsert
-#    (flagship), storage_winnowing_index (the winnowing-index
-#    lifecycle row nearest the gate refactor).
-# Left outside at staleness 2 after this round (r10-green, untouched
-# — they MUST lead the r13 window; 42 rows):
-# agg_distinct_users_approx, agg_quantiles_approx_check,
-# agg_rollup_orders, curation_blocklist, curation_boilerplate,
-# curation_decontaminate, curation_eval_k_per_lang,
-# curation_hash_split, curation_pack_ffd, curation_quality_filter,
-# curation_sample_stratified, curation_shuffle,
-# dedup_embedding_cosine, dedup_embedding_incremental,
-# dedup_semantic_pairs, dedup_winnowing_pairs,
-# embedding_nearest_centroid,
-# events_session_window, events_sessionization, events_sliding_window,
-# events_tumbling_window, join_events_customers, setop_except_all,
-# similarity_knn_classify, similarity_topk_cosine,
-# similarity_topk_lsh, storage_bigram_model, storage_bm25_index,
-# storage_index_incremental, storage_index_roundtrip,
-# storage_ivfpq_index,
-# storage_text_ingest_roundtrip, storage_versioned_roundtrip,
-# storage_zorder_key, text_language_id, text_quality, text_repetition,
-# text_tfidf_terms, text_vocab_coverage, text_winnowing,
-# window_moving_avg, window_running_total.
-# r13 capacity check: 42 mandatory + 0 registrations (frozen) = 42,
-# leaving 8 slots for touched rows + early rotation — fits; steady
-# state from here is 42 + 8 every round.
-# The 50 r11-green rows not in this window rotate out at staleness 1.
-# Registry 142 — frozen, no change.
-#
-# Round-11 window, in order:
-#  - the 41 rows whose last driver-green is r08 (staleness 2 — the
-#    round-10 verdict names them as mandatory leads; re-derived from
-#    all ten CORRECTNESS files before committing this order, set
-#    equality confirmed);
-#  - the 4 queries REGISTERED this round (new plans always enter) —
-#    the end-state's final four;
-#  - 5 staleness-1 rows whose plans this round touched (rule 2b; the
-#    tracked_persist migration of the ngram-Jaccard shingle table and
-#    the minhash-against band tables — a shared-helper change counts
-#    as touching every caller): dedup_ngram_jaccard, dedup_clusters,
-#    curation_leakage_split (ngram_jaccard_pairs callers),
-#    dedup_incremental, curation_fuzzy_decontaminate
-#    (minhash_lsh_pairs_against callers). These double as the rule-2c
-#    fill; the minhash_lsh_pairs sites (callers dedup_minhash_lsh,
-#    dedup_apply — 2 more slots than the window has) ride the r12
-#    rotation, as does the sync_* flagship trio.
-# Left outside at staleness 2 after this round (r09-green, untouched
-# — they MUST lead the r12 window; 42 rows): agg_distinct_users_exact,
-# cdc_incremental_agg, cdc_scd2_history, curation_domain_quota,
-# curation_pack_sequences, curation_redact_pii, curation_target_mix,
-# curation_target_mix_tokens, dedup_apply, dedup_cluster_stats,
-# dedup_exact, dedup_minhash_lsh, embedding_label_centroids,
-# embedding_pq_codes, embedding_quantize, funnel_click_purchase,
-# join_asof_signup, join_binned_range, join_excess_inventory,
-# join_range_shipments, pipeline_corpus_curation,
-# pipeline_training_mix, profile_documents, profile_referential,
-# similarity_ann_recall, similarity_topk_ivf,
-# similarity_topk_ivf_refined, similarity_topk_ivfpq, sync_diff_keyed,
-# sync_diff_positional, sync_validate, text_bigram_gate,
-# text_bigram_lm, text_bm25, text_chunk_documents, text_fingerprint,
-# text_quality_rules, text_readability, text_segment_dedup,
-# text_sentences_udtf, text_term_stats, text_token_counts.
-# r12 capacity check: 42 mandatory + 0 registrations (frozen) = 42,
-# leaving 8 slots for touched rows + early rotation (the
-# minhash_lsh_pairs migration's 2 callers first) — fits.
-# The 50 r10-green rows not in this window rotate out at staleness 1.
-# Registry 138 -> 142 (net +4, exactly the cap) — END STATE.
-#
-# R10 REGISTRATION — executed: storage_simhash_index,
-# dedup_simhash_against, storage_ivfpq_index, storage_bm25_index
-# moved from the r10 queue into queries_ext (the round-9
-# verdict's recommended four; oracle identities documented at their
-# EXT_ORACLES entries). Media
-# perceptual fingerprints (operators/multimodal.py
-# media_fingerprints/media_near_pairs) stay unit-only: the hash is a
-# mapInPandas stage with no SQL twin, the same honest posture as
-# compression_ratios.
-#
-# Round-10 window (for the record):
-#  - the 39 rows whose last driver-green is r07 (staleness 2 — the
-#    round-9 verdict names them as mandatory leads; re-derived from
-#    all nine CORRECTNESS files before committing this order);
-#  - the 4 queries REGISTERED this round (new plans always enter);
-#  - the 3 r09-green rows whose plans this round touched:
-#    storage_winnowing_index + storage_bigram_model (append_index
-#    gained the stored-layout guard and the EXDEV diagnostic —
-#    ADVICE r09 — a shared-helper change counts as touching every
-#    caller; their oracles are unchanged and both were re-verified
-#    hash-identical locally at both SFs) and curation_quality_filter
-#    (quality_percentile_filter's skinny persist moved to the
-#    tracked-persist registry — plan-identical, counted as a touch
-#    out of caution);
-#  - 4 staleness-1 fill (rule 2c): sync_upsert (the last flagship
-#    row not already mandatory) + storage_versioned_roundtrip,
-#    storage_text_ingest_roundtrip, dedup_winnowing_against (the
-#    storage/gate families this round's changes sit nearest).
-# Left outside at staleness 2 after this round (r08-green, untouched
-# — they MUST lead the r11 window; 41 rows): agg_cube_sales,
-# agg_customer_balance_stats, agg_customer_distribution,
-# agg_forecast_revenue, agg_grouping_sets, agg_important_stock,
-# agg_order_priority, agg_pivot_status, agg_pricing_summary,
-# agg_promo_revenue, agg_quantiles_status, agg_status_sets,
-# agg_supplier_part_types, join_disjunctive_promo, join_large_orders,
-# join_lonely_returned_supplier, join_market_share,
-# join_min_cost_supplier, join_nation_trade, join_priority_lines,
-# join_product_profit, join_returned_items, join_revenue_by_nation,
-# join_salted_revenue, join_shipping_priority, join_small_qty_parts,
-# json_events_extract, multimodal_audio_decode, multimodal_decode,
-# multimodal_features, multimodal_media_stats, scalar_functions,
-# setop_customers_without_orders, setop_idle_rich_customers,
-# setop_repeat_customers, storage_media_ingest_roundtrip,
-# storage_media_wav_roundtrip, subquery_exists_orders,
-# text_token_stats, window_top_supplier, window_topk_orders.
-# r11 capacity check: 41 mandatory + 4 final registrations = 45,
-# leaving 5 slots for touched rows + early rotation — fits.
-# The 50 r09-green rows not in this window rotate out at staleness 1.
-# Registry 134 -> 138 (net +4, exactly the cap).
-#
-# Round-9 window (for the record):
-#  - the 40 rows whose last driver-green is r06 (staleness 2 — the
-#    round-8 verdict names them as mandatory leads; I re-derived the
-#    set from all eight CORRECTNESS files and it matches exactly);
-#  - the 2 queries NEW this round: storage_bigram_model (the bigram-LM
-#    model lifecycle — build/save/load/merge/save/load/score-from-
-#    stored-model, pinned to text_bigram_lm's own oracle: append must
-#    equal rebuild) and text_bigram_gate (the ingest-time quality
-#    gate: batch scored against the corpus model, unseen bigrams
-#    q=0 via left-join COALESCE semantics the oracle replays);
-#  - the 5 rows whose plans this round touched: text_bigram_lm
-#    (extraction refactored into bigram_occurrences + pinned persist
-#    level), curation_quality_filter (persist added before the
-#    five-consumer fan-out — ADVICE item), similarity_topk_ivfpq
-#    (dim%m_sub guard + lloyd_iters threading, default off),
-#    embedding_pq_codes (lloyd_iters threading, default off; both
-#    PQ rows re-verified hash-identical locally before commit), and
-#    storage_winnowing_index (late-round touch: merge persistence
-#    switched to the batch-I/O append_index — it displaced the fourth
-#    early-rotation fill below);
-#  - 3 of the 42 staleness-1 rows rotated forward early, chosen per
-#    policy rule 2c: three of the four r07-green sync_* flagship rows
-#    (sync_apply_keyed was the fourth; it gave its slot to the
-#    late-touched storage_winnowing_index and leads r10 instead).
-#    This leaves r10's mandatory load at 39 — 11 free slots.
-# Left outside at staleness 2 after this round (r07-green, untouched —
-# they MUST lead the r10 window; 39 rows): sync_apply_keyed,
-# agg_distinct_users_approx,
-# agg_quantiles_approx_check, agg_rollup_orders, curation_blocklist,
-# curation_boilerplate, curation_decontaminate, curation_eval_k_per_lang,
-# curation_hash_split, curation_pack_ffd, curation_sample_stratified,
-# curation_shuffle, dedup_embedding_cosine, dedup_embedding_incremental,
-# dedup_semantic_pairs, dedup_simhash, dedup_simhash_pairs,
-# dedup_winnowing_pairs, embedding_nearest_centroid,
-# events_session_window, events_sessionization, events_sliding_window,
-# events_tumbling_window, join_events_customers, setop_except_all,
-# similarity_knn_classify, similarity_topk_cosine, similarity_topk_lsh,
-# storage_index_incremental, storage_index_roundtrip, storage_zorder_key,
-# text_language_id, text_quality, text_repetition, text_tfidf_terms,
-# text_vocab_coverage, text_winnowing, window_moving_avg,
-# window_running_total. The 50 r08-green rows rotate out at
-# staleness 1. Registry 132 -> 134 (net +2, within the cap).
-#
-# Round-8 window (for the record):
-#  - the 6 queries NEW this round: storage_winnowing_index (the
-#    winnowing index lifecycle — save/load/merge/pairs-from-index,
-#    append==rebuild pinned to dedup_winnowing_pairs' own oracle),
-#    dedup_winnowing_against (the ingest gate: batch fingerprints vs
-#    the stored index, cross-pair oracle),
-#    storage_media_wav_roundtrip (the media file round trip for the
-#    audio codec family; oracle = multimodal_audio_decode's twin), and
-#    text_bigram_lm (corpus-bigram-model quality scoring — the
-#    doctrine-compliant linear surrogate for LM perplexity), and
-#    embedding_pq_codes (product-quantization encoding: per-subspace
-#    md5-sample codebooks, exact nearest-codeword assignment,
-#    int64-quantized reconstruction error), and
-#    similarity_topk_ivfpq (IVF-PQ asymmetric-distance serving:
-#    cell-probe candidates scored from PQ codes + a per-query LUT,
-#    partial dots int64-quantized before the cross-row sum);
-#  - the 26 rows whose last driver-green is r05 (staleness 2 — the
-#    round-7 verdict names them as mandatory leads; pure
-#    relational/projection shapes);
-#  - the 8 r07-green rows whose plans this round touched (listed at
-#    the _PRIORITY entries below);
-#  - 10 of the 50 r06-green rows rotated forward early to flatten the
-#    r09 mandatory load.
-# Left outside at staleness 2 after this round (r06-green, untouched —
-# they MUST lead the r09 window; 40 rows): text_chunk_documents,
-# profile_referential, join_excess_inventory,
-# similarity_ann_recall,
-# curation_leakage_split, text_segment_dedup, curation_target_mix,
-# curation_target_mix_tokens, dedup_cluster_stats, dedup_apply,
-# pipeline_training_mix, dedup_exact, curation_redact_pii,
-# curation_pack_sequences, embedding_quantize,
-# curation_fuzzy_decontaminate, curation_domain_quota, dedup_clusters,
-# similarity_topk_ivf, similarity_topk_ivf_refined, dedup_incremental,
-# dedup_minhash_lsh, dedup_ngram_jaccard, profile_documents,
-# text_quality_rules, text_bm25, embedding_label_centroids,
-# text_token_counts, text_term_stats, text_readability,
-# text_sentences_udtf, text_fingerprint, join_asof_signup,
-# join_range_shipments, join_binned_range, cdc_scd2_history,
-# cdc_incremental_agg, funnel_click_purchase,
-# agg_distinct_users_exact, pipeline_corpus_curation. The 42
-# remaining r07-green rows rotate out at staleness 1. NOTE: at 132
-# registered queries the 50-slot window's sustainable ceiling is 150
-# (each query needs a green row every 3 rounds); registry growth per
-# round must stay <= ~7 net or the window policy needs widening.
-#
-# Round-7 window (for the record):
-#  - the 12 queries NEW this round (new plans always enter the window):
-#    storage_versioned_roundtrip + storage_index_roundtrip (the
-#    round-6 verdict's #2 — the versioned-table and persisted-index
-#    lifecycles round-trip through disk INSIDE a registry query whose
-#    oracle is the un-persisted plan's twin), multimodal_decode (real
-#    pure-numpy PPM codec under the gate — verdict #4),
-#    curation_pack_ffd (the FFD packer's recursive-CTE oracle —
-#    verdict #5), storage_index_incremental (append-to-index ==
-#    rebuild, pinned to dedup_minhash_lsh's own oracle),
-#    storage_text_ingest_roundtrip (write text dump -> re-ingest with
-#    content ids; closes ingestion's driver-visibility gap),
-#    multimodal_audio_decode (real pure-numpy PCM WAV codec),
-#    text_vocab_coverage (top-V corpus vocab + per-doc OOV counts),
-#    curation_quality_filter (exact percentile quality gate per
-#    language), text_winnowing (MOSS winnowing fingerprints,
-#    rightmost-tie rule, oracle replays the selection),
-#    dedup_winnowing_pairs (substring-match pair detection over the
-#    fingerprints, hub-fingerprint df cap), and
-#    storage_media_ingest_roundtrip (write_media_dir executor-side
-#    binary export -> binaryFile re-ingest -> real codec decode;
-#    oracle = multimodal_decode's twin — files must change nothing);
-#  - the 19 rows whose last driver-green is r04 (staleness 2 — the
-#    round-6 verdict names them as mandatory leads): window_moving_avg,
-#    setop_except_all, multimodal_media_stats, curation_boilerplate,
-#    curation_blocklist, curation_shuffle, curation_sample_stratified,
-#    curation_decontaminate, curation_hash_split, storage_zorder_key,
-#    agg_quantiles_approx_check, window_running_total,
-#    join_events_customers, events_sliding_window,
-#    agg_distinct_users_approx, events_sessionization,
-#    events_tumbling_window, events_session_window, agg_rollup_orders;
-#  - 19 of the 45 rows whose last driver-green is r05 (the stalest
-#    remaining tier): the five sync_* flagship rows (the reference's
-#    own surface), then the similarity/dedup/text families (the plans
-#    most often touched), then relational rows to fill.
-# Left outside at staleness 2 after this round (r05-green, untouched —
-# they MUST lead the r08 window): agg_pivot_status, agg_grouping_sets,
-# agg_quantiles_status, setop_repeat_customers, join_shipping_priority,
-# join_returned_items, agg_promo_revenue, join_priority_lines,
-# agg_order_priority, agg_forecast_revenue, agg_customer_distribution,
-# join_large_orders, setop_idle_rich_customers, join_small_qty_parts,
-# join_lonely_returned_supplier, join_disjunctive_promo,
-# join_nation_trade, window_top_supplier, agg_customer_balance_stats,
-# join_salted_revenue, agg_status_sets, text_token_stats,
-# subquery_exists_orders, agg_cube_sales, json_events_extract,
-# agg_pricing_summary — pure
-# relational/projection shapes over untouched loaders. The 50
-# r06-green rows rotate out at staleness 1.
-#
-_PRIORITY = [
-    # 46 mandatory leads (policy rule 2a: ALL of them, first): the
-    # staleness-2 cohort, last driver-green r14. Re-derived from
-    # CORRECTNESS_r14/r15/r16, set equality with the r16 verdict's
-    # leave-out comment confirmed before committing this order.
-    "agg_cube_sales", "agg_customer_balance_stats",
-    "agg_customer_distribution", "agg_forecast_revenue",
-    "agg_grouping_sets", "agg_important_stock", "agg_order_priority",
-    "agg_pivot_status", "agg_pricing_summary", "agg_promo_revenue",
-    "agg_quantiles_status", "agg_status_sets",
-    "agg_supplier_part_types", "curation_lm_buckets",
-    "join_disjunctive_promo", "join_large_orders",
-    "join_lonely_returned_supplier", "join_market_share",
-    "join_min_cost_supplier", "join_nation_trade",
-    "join_priority_lines", "join_product_profit",
-    "join_returned_items", "join_revenue_by_nation",
-    "join_salted_revenue", "join_shipping_priority",
-    "join_small_qty_parts", "json_events_extract",
-    "multimodal_audio_decode", "multimodal_decode",
-    "multimodal_features", "multimodal_media_stats",
-    "scalar_functions", "setop_customers_without_orders",
-    "setop_idle_rich_customers", "setop_repeat_customers",
-    "similarity_ann_recall", "similarity_topk_cosine",
-    "similarity_topk_ivf_refined", "storage_media_ingest_roundtrip",
-    "storage_media_wav_roundtrip", "subquery_exists_orders",
-    "text_clf_gate", "text_token_stats", "window_top_supplier",
-    "window_topk_orders",
-    # 4 mandatory deviation leads (the round-16 documented-deviation
-    # protocol: slotless rule-2b changes of r16, all three-SF verified
-    # locally when they landed — scd2 tie-break -> cdc_scd2_history;
-    # NULL-token-count refusal -> curation_pack_sequences,
-    # curation_target_mix_tokens; wrapper persists ->
-    # pipeline_corpus_curation).
-    "cdc_scd2_history", "curation_pack_sequences",
-    "curation_target_mix_tokens", "pipeline_corpus_curation",
-]
-
+_PRIORITY = WINDOW
 _ORDER = _PRIORITY + [k for k in _ALL_QUERIES if k not in set(_PRIORITY)]
 QUERIES = {k: _ALL_QUERIES[k] for k in _ORDER}
 ORACLES = {k: _ALL_ORACLES.get(k) for k in _ORDER}

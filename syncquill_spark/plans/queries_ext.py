@@ -4348,7 +4348,7 @@ def q_storage_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- registered in r11 from plans/queue_r10.py / queue_r11.py — the
 # FINAL FOUR of the declared 142-row end-state (registry policy,
-# plans/__init__.py): these complete the contamination
+# tools/window.py): these complete the contamination
 # detect -> localize -> cut story and the classifier-gate and CCNet
 # bucket families, the only driver-unverified capabilities left. The
 # five pairs remaining in plans/queue_permanent.py stay PERMANENTLY

@@ -1,6 +1,7 @@
 """PERMANENT verification queue — the query/oracle pairs that stay
 queue-verified FOREVER under the registry end-state (round-10
-decision; full capacity arithmetic in `plans/__init__.py`): the five
+decision; the window policy and its capacity arithmetic are in
+`tools/window.py`, the committed window in `plans/window.py`): the five
 end-state residue pairs plus curation_url_dedup (added r12 — queue
 growth is net-0 for the REGISTRY, the queue itself may grow).
 

@@ -1,22 +1,22 @@
 """Window-policy invariants, pinned in-suite (no Spark session).
 
-The round driver verifies the FIRST 50 registry entries; the repo's
-standing policy (plans/__init__.py) adds the staleness rule: no
-registered query may go more than 2 rounds without a driver-green
-row. These invariants were previously checked by ad-hoc scripts each
-round; a rotation mistake (51 names, a touched row left outside, a
-stale row not rotated in) silently costs a round. Pin them here so
-`pytest -q` fails the moment the window drifts.
+The round driver verifies the FIRST 50 registry entries; the staleness
+rule says no registered query may go more than 2 rounds without a
+driver-green row. The policy itself lives in tools/window.py, which
+derives the window from the CORRECTNESS artifacts; these tests check
+the committed window against it, so a missed rotation fails
+`pytest -q` instead of silently costing a round.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
+import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from tools import window  # noqa: E402
 
 
 def _registry():
@@ -35,8 +35,8 @@ def test_registry_is_frozen_at_142():
     queries, oracles = _registry()
     assert len(queries) == 142, (
         "registry size changed from the declared end state; growth is "
-        "frozen — a new entry must SWAP against a retirement (net 0), "
-        "recorded in plans/__init__.py"
+        "frozen — a new entry must SWAP against a retirement (net 0); "
+        "policy in tools/window.py"
     )
     assert set(queries) == set(oracles)
     # zero rows-only oracles: every registered query is hash-checked
@@ -64,26 +64,15 @@ def test_staleness_invariant_over_correctness_artifacts():
     round start (before the rotation commit) the staleness-2 cohort
     legitimately has no green in the last two artifacts and no slot
     in the PREVIOUS round's still-committed window — that is the
-    state the rotation exists to fix, not a breach; the companion
-    test below forces those rows to be NAMED as the next window's
-    mandatory leads."""
-    files = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
+    state the rotation exists to fix, not a breach;
+    test_window_matches_derivation below catches it."""
+    files = window.artifact_paths()
     if len(files) < 2:  # fresh clone without artifacts: nothing to pin
         return
-    green: set[str] = set()
-    for path in files[-3:]:
-        data = json.load(open(path))
-        for name, row in data.items():
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match") in (True, None)
-                and not row.get("err")
-            ):
-                green.add(name)
+    newest, last = window.last_green(files)
+    green = {n for n, r in last.items() if r >= newest - window.MAX_STALENESS}
     queries, _ = _registry()
-    window = set(_priority())
-    stranded = sorted(set(queries) - green - window)
+    stranded = sorted(set(queries) - green - set(_priority()))
     assert not stranded, (
         "rows with no driver-green in the last 2 rounds AND no slot "
         f"in the current window (staleness break next round): {stranded}"
@@ -98,73 +87,21 @@ def test_permanent_queue_disjoint_from_registry():
     assert not overlap, f"queued pairs already registered: {overlap}"
 
 
-def test_window_comment_names_next_rounds_mandatory_leads():
-    """The leave-out comment in plans/__init__.py must name every row
-    that the staleness rule makes mandatory NEXT round, so the next
-    session cannot miss one. Derived the same way the judge checks:
-    green in round N-1 artifacts but absent from both the current
-    window and round N's artifacts."""
-    files = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
+def test_window_matches_derivation():
+    """The committed window is exactly what tools/window.py derives
+    from the CORRECTNESS artifacts and TOUCHED. A new artifact or a new
+    TOUCHED entry fails this until the window is regenerated."""
+    files = window.artifact_paths()
     if len(files) < 2:
         return
+    import syncquill_spark.plans as p
+    from syncquill_spark.plans.window import TOUCHED
 
-    def greens(path):
-        data = json.load(open(path))
-        return {
-            n
-            for n, row in data.items()
-            if row.get("rows_match")
-            and row.get("schema_match")
-            and row.get("hash_match") in (True, None)
-            and not row.get("err")
-        }
-
-    prev2, prev1 = greens(files[-2]), greens(files[-1])
-    queries, _ = _registry()
-    window = set(_priority())
-    # after THIS round's driver run, staleness-2 rows will be the ones
-    # last green two artifacts ago and not re-verified since
-    next_mandatory = sorted(
-        (set(queries) & prev2) - prev1 - window
-    )
-    src = open(
-        os.path.join(REPO, "syncquill_spark", "plans", "__init__.py")
-    ).read()
-    # Scope the name scan to the CURRENT round's leave-out block
-    # (ADVICE r11: matched against the whole file, a lead omitted from
-    # the current comment still passed whenever its name appeared in
-    # any HISTORICAL window comment or in _PRIORITY itself — which is
-    # almost always — making the check near-vacuous). ADVICE r12:
-    # don't rely on blocks staying reverse-chronological — anchor to
-    # the HIGHEST "Round-N window" heading, then take the first
-    # "Left outside ..." block after it.
-    headings = [
-        (int(n), m.end())
-        for n, m in (
-            (m.group(1), m)
-            for m in re.finditer(r"Round-(\d+) window", src)
-        )
-    ]
-    assert headings, "no 'Round-N window' heading found"
-    _, start = max(headings)
-    m = re.search(
-        r"Left outside at staleness 2.*?capacity check",
-        src[start:],
-        re.DOTALL,
-    )
-    assert m, (
-        "current round's leave-out comment block not found after the "
-        "highest 'Round-N window' heading"
-    )
-    comment_names = set(re.findall(r"[a-z0-9_]+", m.group(0)))
-    missing = [n for n in next_mandatory if n not in comment_names]
-    assert not missing, (
-        "ROTATION PENDING — this failure is the designed r(N+1) "
-        "first-commit trigger, not a code regression: the driver's "
-        "newest CORRECTNESS artifact has landed and the staleness rule "
-        "now makes these rows mandatory next-window leads, but the "
-        "current leave-out comment block doesn't name them. Fix: "
-        "rotate _PRIORITY in syncquill_spark/plans/__init__.py (the "
-        "staleness-2 cohort first, then 8 fill) and write the new "
-        f"round's window comment naming: {missing}"
+    derived = window.derive(p._ALL_QUERIES, files, TOUCHED)
+    pri = _priority()
+    assert pri == derived, (
+        "ROTATION PENDING: rows the derivation puts in the window but "
+        f"_PRIORITY lacks: {[n for n in derived if n not in pri]}; rows "
+        f"it drops: {[n for n in pri if n not in derived]}. "
+        "Run `python tools/window.py --write`."
     )

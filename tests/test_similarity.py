@@ -1391,6 +1391,47 @@ def test_kernels_mask_pathological_rows(spark):
     assert clean[(6, 6)]["c"] == pytest.approx(1.0)
 
 
+def test_subtract_and_valid_vector_mask_pathological_rows(spark):
+    """subtract_arrow stacked unmasked, so one NULL or ragged row
+    aborted residual IVF-PQ; it now yields NULL for such pairs.
+    valid_vector is the IVF-PQ corpus filter: only full-length, finite,
+    non-NULL, non-zero vectors pass, on float and double arrays."""
+    from syncquill_spark.functions.vectors import subtract_arrow, valid_vector
+
+    df = _pathological(spark)
+    out = {
+        r["vec_id"]: r["d"]
+        for r in df.select(
+            "vec_id", subtract_arrow(F.col("embedding"), F.col("embedding")).alias("d")
+        ).collect()
+    }
+    assert out[1] == [0.0] * 64 and out[6] == [0.0] * 63
+    assert out[3] is None and out[4] is None and out[5] is None
+
+    odd = [
+        (7, [0.0] * 64),
+        (8, _BASE[:-1] + [float("-inf")]),
+        (9, _BASE[:-1] + [None]),
+        (10, _BASE + [1.0]),
+    ]
+    frames = [
+        df.union(spark.createDataFrame(odd, "vec_id long, embedding array<double>")),
+        spark.createDataFrame(
+            [(1, _BASE), (4, [float("nan")] * 64)] + odd,
+            "vec_id long, embedding array<float>",
+        ),
+    ]
+    for frame in frames:
+        flags = {
+            r["vec_id"]: r["ok"]
+            for r in frame.select(
+                "vec_id", valid_vector(F.col("embedding"), 64).alias("ok")
+            ).collect()
+        }
+        assert {i for i, ok in flags.items() if ok} == {1, 2} & set(flags)
+        assert all(ok in (True, False) for ok in flags.values()), flags
+
+
 def test_topk_excludes_pathological_corpus_rows(spark):
     """Before the guard, a NaN cosine RANKED FIRST in every top-k
     (Spark sorts NaN above every double) and NULL-scored rows filled

@@ -435,6 +435,35 @@ def case_specs():
     add("ivf_pathological", lambda ctx: _sim().ivf_topk(
         ctx.patho, ctx.q1, k=3, n_cells=2, nprobe=2))
 
+    # IVF-PQ trained on and served from patho + 20 valid rows: a ragged
+    # row used to rank first, NULL/NaN/Inf rows ranked, and residual
+    # mode aborted in subtract_arrow. Only patho ids 1 and 2 may get
+    # codes or rank, in the one-shot and the persisted-index serve.
+    def _ivfpq_patho_ranks(residual):
+        def run(ctx):
+            valid = ctx.spark.createDataFrame(
+                [(1000 + i, [float((i * 7 + j * 3) % 11 - 5) for j in range(64)])
+                 for i in range(20)],
+                "vec_id long, embedding array<double>")
+            sim, corpus = _sim(), ctx.patho.union(valid)
+            got = sim.ivfpq_topk(corpus, ctx.q1, k=30, n_cells=2, nprobe=2,
+                                 residual=residual).collect()
+            ranked = {r["neighbor_id"] for r in got}
+            assert ranked & set(range(1, 8)) == {1, 2}, sorted(ranked)
+            assert len(ranked) == 22, sorted(ranked)
+            index = sim.ivfpq_build_index(corpus, n_cells=2, residual=residual)
+            served = sim.ivfpq_topk_from_index(
+                ctx.q1, index, k=30, nprobe=2, residual=residual).collect()
+            assert sorted(served) == sorted(got)
+            coded = {r["vec_id"] for r in index["codes"].collect()}
+            assert coded & set(range(1, 8)) == {1, 2}, sorted(coded)
+            return len(got)
+
+        return run
+
+    add("ivfpq_pathological_ranks", _ivfpq_patho_ranks(False))
+    add("ivfpq_residual_pathological_ranks", _ivfpq_patho_ranks(True))
+
     # --- corrupt media payloads (the triage gate) ----------------------
     def _mm():
         import syncquill_spark.operators.multimodal as m
