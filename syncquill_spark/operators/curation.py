@@ -662,7 +662,7 @@ def target_mix(
         F.concat_ws(":", F.lit(salt), F.col(id_col).cast("string"))
     )
     w = Window.partitionBy(stratify_col).orderBy(h.asc(), F.col(id_col).asc())
-    tgt = tmap.getItem(F.col(stratify_col))
+    tgt = tmap[F.col(stratify_col)]
     return (
         df.withColumn("mix_rank", F.row_number().over(w))
         .filter((F.col("mix_rank") <= F.lit(max_k)) & (F.col("mix_rank") <= tgt))
@@ -736,7 +736,7 @@ def target_mix_tokens(
         )
     )
     return ranked.filter(
-        F.col("_cum_before") < bmap.getItem(F.col(stratify_col))
+        F.col("_cum_before") < bmap[F.col(stratify_col)]
     ).select(
         id_col,
         stratify_col,

@@ -14,6 +14,53 @@ import os
 
 from pyspark.sql import SparkSession
 
+JAVA_OPTIONS_KEY = "spark.driver.extraJavaOptions"
+
+# Driver JVM flags. In local[N] mode the driver JVM is also the executor,
+# so these govern every task thread of a local run.
+#
+# Larger JIT code cache: a long session compiles one generated class per
+# distinct plan; when the cache fills, the JVM silently stops
+# JIT-compiling (or flushing evicts + forces recompiles) and
+# whole-stage-codegen queries run interpreted (measured ~10x on
+# fold-heavy plans late in a benchmark run — recurred at 512m past 80
+# plans, then AGAIN at 1g past ~88 plans: fold-heavy late-run queries
+# read 2.5x their isolated time, e.g. dedup_embedding_cosine 8.0s in-run
+# vs 3.2s isolated; 2g restored 3.4s in-run). Size this with the plan
+# count of the longest-lived session.
+#
+# Tier-4 (C2) thresholds at 10x their JDK 17 defaults (5000 / 600 /
+# 15000 / 40000). A job's first cycle runs Catalyst, Janino and Py4J
+# code a few thousand times; at the defaults C2 compiled all of it, and
+# C2 threads were the largest CPU consumer of a one-shot corpus release
+# (24 of 55 CPU s on 4 cores) and of 7 of its 8 registry queries.
+# Raised, that lukewarm code stays in C1 code (release C2 24 -> 11 s),
+# while hot data loops still reach C2: at real row counts they cross
+# even these thresholds within milliseconds. Measured on a 4-core VM,
+# 10 alternating pairs of first cycles: corpus release 75.8 -> 62.8
+# CPU s, sheet sync 33.0 -> 25.3 CPU s, 10/10 pairs each. Wall rose
+# ~5% there (C2 had compiled on otherwise idle cores, and C1 code runs
+# the task threads slower); warm sf0.1 queries stayed within 0.97-1.04x.
+# A sweep (median of 3 seeds, release / sheet CPU s) chose the factor:
+# defaults 83.7 / 34.8, 5x 62.7 / 26.4, 10x 55.9 / 25.0, 15x 66.3 / 21.2,
+# 30x 60.1 / 20.4. Not C1-only (-XX:TieredStopAtLevel=1): it cut the
+# first cycle further but made warm sf0.1 queries 1.2-2.0x slower, and
+# long sessions and the driver bench are warm. Not 30x: the release was
+# no cheaper than at 10x (an earlier run read 75.7 / 77.1 s there, as
+# methods stay longer in the slow, fully profiled tier 3), and every
+# raise keeps more warm code out of C2. Executors of a cluster keep the
+# default tiering (spark.executor.extraJavaOptions is not set): they are
+# long-lived and bound by data, not by compilation.
+DRIVER_JAVA_OPTIONS = " ".join([
+    "-Djava.net.preferIPv4Stack=true",
+    "-XX:ReservedCodeCacheSize=2g",
+    "-XX:+UseCodeCacheFlushing",
+    "-XX:Tier4InvocationThreshold=50000",
+    "-XX:Tier4MinInvocationThreshold=6000",
+    "-XX:Tier4CompileThreshold=150000",
+    "-XX:Tier4BackEdgeThreshold=400000",
+])
+
 
 def get_spark(
     app_name: str = "syncquill-spark",
@@ -31,12 +78,19 @@ def get_spark(
     - Arrow enabled: pandas_udf / mapInPandas exchange is columnar.
     - shuffle.partitions: env SPARK_GRAFT_CPUS locally; on a real
       cluster override to ~2-3x total cores.
+    - driver JVM flags: ``DRIVER_JAVA_OPTIONS`` (code cache, JIT
+      tiering). A ``spark.driver.extraJavaOptions`` in ``extra_conf``
+      is appended after them, not put in their place.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
 
+    extra = dict(extra_conf or {})
+    # a caller's JVM flags go after the engine's: HotSpot takes the last
+    # occurrence of a flag, so one can be overridden without losing the rest
+    java_options = " ".join(filter(None, (DRIVER_JAVA_OPTIONS, extra.pop(JAVA_OPTIONS_KEY, None))))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -72,23 +126,8 @@ def get_spark(
         # task threads — size it for the box, not for a thin driver.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
-        # Larger JIT code cache: a long session compiles one generated
-        # class per distinct plan; when the cache fills, the JVM
-        # silently stops JIT-compiling (or flushing evicts + forces
-        # recompiles) and whole-stage-codegen queries run interpreted
-        # (measured ~10x on fold-heavy plans late in a benchmark run —
-        # recurred at 512m past 80 plans, then AGAIN at 1g past ~88
-        # plans: fold-heavy late-run queries read 2.5x their isolated
-        # time, e.g. dedup_embedding_cosine 8.0s in-run vs 3.2s
-        # isolated; 2g restored 3.4s in-run). Size this with the plan
-        # count of the longest-lived session.
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-Djava.net.preferIPv4Stack=true -XX:ReservedCodeCacheSize=2g"
-            " -XX:+UseCodeCacheFlushing",
-        )
+        .config(JAVA_OPTIONS_KEY, java_options)
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in extra.items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -117,7 +117,7 @@ def read_media_dir(
         mmap = F.create_map(
             *[F.lit(x) for kv in MODALITY_BY_EXT.items() for x in kv]
         )
-        mod = F.coalesce(mmap.getItem(ext), F.lit("binary"))
+        mod = F.coalesce(mmap[ext], F.lit("binary"))
     return raw.select(
         portable_hash60(
             F.concat_ws(":", F.lit(id_salt), F.col("path"))

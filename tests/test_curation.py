@@ -546,6 +546,22 @@ def test_target_mix_tokens_budget_and_overflow(spark):
         target_mix_tokens(df, {})
 
 
+def test_target_mix_builds_no_deprecated_map_lookup(spark):
+    """Both mixes look their stratum target up as ``map[col]``: the
+    ``getItem(Column)`` form warns (FutureWarning) and is deprecated
+    for removal."""
+    import warnings
+
+    from syncquill_spark.operators.curation import target_mix, target_mix_tokens
+
+    rows = [(i, "aaaa aaaa", "en" if i % 3 else "de") for i in range(30)]
+    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        assert len(target_mix(df, {"en": 4, "de": 2}).collect()) == 6
+        assert len(target_mix_tokens(df, {"en": 4}).collect()) == 2
+
+
 from hypothesis import given, settings, strategies as st  # noqa: E402
 
 
