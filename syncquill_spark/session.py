@@ -31,26 +31,21 @@ JAVA_OPTIONS_KEY = "spark.driver.extraJavaOptions"
 #
 # Tier-4 (C2) thresholds at 10x their JDK 17 defaults (5000 / 600 /
 # 15000 / 40000). A job's first cycle runs Catalyst, Janino and Py4J
-# code a few thousand times; at the defaults C2 compiled all of it, and
-# C2 threads were the largest CPU consumer of a one-shot corpus release
-# (24 of 55 CPU s on 4 cores) and of 7 of its 8 registry queries.
-# Raised, that lukewarm code stays in C1 code (release C2 24 -> 11 s),
-# while hot data loops still reach C2: at real row counts they cross
-# even these thresholds within milliseconds. Measured on a 4-core VM,
-# 10 alternating pairs of first cycles: corpus release 75.8 -> 62.8
-# CPU s, sheet sync 33.0 -> 25.3 CPU s, 10/10 pairs each. Wall rose
-# ~5% there (C2 had compiled on otherwise idle cores, and C1 code runs
-# the task threads slower); warm sf0.1 queries stayed within 0.97-1.04x.
-# A sweep (median of 3 seeds, release / sheet CPU s) chose the factor:
-# defaults 83.7 / 34.8, 5x 62.7 / 26.4, 10x 55.9 / 25.0, 15x 66.3 / 21.2,
-# 30x 60.1 / 20.4. Not C1-only (-XX:TieredStopAtLevel=1): it cut the
-# first cycle further but made warm sf0.1 queries 1.2-2.0x slower, and
-# long sessions and the driver bench are warm. Not 30x: the release was
-# no cheaper than at 10x (an earlier run read 75.7 / 77.1 s there, as
-# methods stay longer in the slow, fully profiled tier 3), and every
-# raise keeps more warm code out of C2. Executors of a cluster keep the
-# default tiering (spark.executor.extraJavaOptions is not set): they are
-# long-lived and bound by data, not by compilation.
+# code a few thousand times; at the defaults C2 compiles all of it, and
+# C2 threads were the largest CPU consumer of a one-shot corpus release.
+# Raised, that lukewarm code stays in C1 code, while hot data loops
+# still reach C2: at real row counts they cross even these thresholds
+# within milliseconds. The cost falls on wall time where a session
+# runs many distinct plans once each (the full-registry bench.py read
+# ~1.1x): task threads run C1 code longer, and C2 no longer compiles
+# on otherwise idle cores. Not C1-only (-XX:TieredStopAtLevel=1): hot
+# loops then never reach C2, and warm queries ran 1.2-2.0x slower. Not
+# higher: a higher factor was not measurably cheaper, and each raise
+# keeps more warm code out of C2 and longer in the slow, fully
+# profiled tier 3. Executors of a cluster keep the default tiering
+# (spark.executor.extraJavaOptions is not set): they are long-lived and
+# bound by data, not by compilation. Measurements: SCALE.md "JIT
+# tiering".
 DRIVER_JAVA_OPTIONS = " ".join([
     "-Djava.net.preferIPv4Stack=true",
     "-XX:ReservedCodeCacheSize=2g",

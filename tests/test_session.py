@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from types import SimpleNamespace
 
+import pytest
+
 from syncquill_spark import session
 from syncquill_spark.session import JAVA_OPTIONS_KEY
 
@@ -51,18 +53,16 @@ def _conf_of(monkeypatch, extra_conf):
     return session.get_spark("t", master="local[1]", extra_conf=extra_conf)
 
 
-def test_extra_conf_java_options_append_after_engine_flags(monkeypatch):
-    conf = _conf_of(monkeypatch, {
-        JAVA_OPTIONS_KEY: "-XX:Tier4InvocationThreshold=7 -Dx=1",
-        "spark.sql.warehouse.dir": "/w",
-    })
-    opts = conf[JAVA_OPTIONS_KEY].split()
-    assert opts[: len(session.DRIVER_JAVA_OPTIONS.split())] == session.DRIVER_JAVA_OPTIONS.split()
-    # the caller's flags come last, so HotSpot takes the caller's value
-    assert opts[-2:] == ["-XX:Tier4InvocationThreshold=7", "-Dx=1"]
+@pytest.mark.parametrize("caller_flags, tail", [
+    (None, []),
+    ("-XX:Tier4InvocationThreshold=7 -Dx=1", ["-XX:Tier4InvocationThreshold=7", "-Dx=1"]),
+])
+def test_extra_conf_java_options_append_after_engine_flags(monkeypatch, caller_flags, tail):
+    extra_conf = {"spark.sql.warehouse.dir": "/w"}
+    if caller_flags is not None:
+        extra_conf[JAVA_OPTIONS_KEY] = caller_flags
+    conf = _conf_of(monkeypatch, extra_conf)
+    # every engine flag is kept, and the caller's come last, so HotSpot
+    # takes the caller's value
+    assert conf[JAVA_OPTIONS_KEY].split() == session.DRIVER_JAVA_OPTIONS.split() + tail
     assert conf["spark.sql.warehouse.dir"] == "/w"
-
-
-def test_engine_flags_without_extra_conf(monkeypatch):
-    assert _conf_of(monkeypatch, None)[JAVA_OPTIONS_KEY] == session.DRIVER_JAVA_OPTIONS
-    assert _conf_of(monkeypatch, {"spark.x": "1"})[JAVA_OPTIONS_KEY] == session.DRIVER_JAVA_OPTIONS
