@@ -11,9 +11,18 @@ Two equivalent families, bit-identical by construction:
   kernels that replay the SAME left-to-right fold — vectorized over
   ROWS, sequential over DIMENSIONS — so every intermediate rounding
   step matches the HOF fold (and DuckDB's list_reduce) bit for bit,
-  while running at numpy speed. Use these wherever the fold is per
-  corpus row. (A plain numpy dot/einsum would pairwise-sum and drift
-  in the last ulp — enough to flip near-tie rankings cross-engine.)
+  while running at numpy speed. Use these where a fold is per row
+  PAIR (a candidate list, a LUT entry). (A plain numpy dot/einsum
+  would pairwise-sum and drift in the last ulp — enough to flip
+  near-tie rankings cross-engine.)
+
+Scoring a corpus against a small table and keeping the best rows
+(top-k, nearest centroid or codeword, cell probes) does not go through
+these per-pair kernels: `operators/similarity.py::_nearest` is the one
+core for it. It replays the same folds on a batch x small matrix
+(dot, cosine and squared L2), masks the same pairs (`_stack_f64_masked`
+plus the zero-norm cosine rule), and ranks valid scores first, best
+first, ties to the smaller id, invalid scores last.
 """
 
 from __future__ import annotations
@@ -224,24 +233,6 @@ def cosine_similarity_arrow(a, b):
     with np.errstate(divide="ignore", invalid="ignore"):
         out = d / (np.sqrt(na) * np.sqrt(nb))
     return _masked_series(out, valid & (na > 0.0) & (nb > 0.0))
-
-
-@pandas_udf(DoubleType())
-def squared_l2_arrow(a, b):
-    """Bit-identical Arrow replacement for the squared-L2 fold
-    aggregate(zip_with(a, b, (x-m)*(x-m)), 0.0, +): per element one
-    subtract then one multiply, accumulated left-to-right."""
-    import numpy as np
-    import pandas as pd
-
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    valid, xa, xb = _stack_f64_masked(a, b)
-    acc = np.zeros(len(a), dtype=np.float64)
-    for j in range(xa.shape[1]):
-        t = xa[:, j] - xb[:, j]
-        acc = acc + t * t
-    return _masked_series(acc, valid)
 
 
 @pandas_udf(ArrayType(DoubleType()))  # DataType object: a DDL string

@@ -1,8 +1,8 @@
 """Vector similarity search over embedding columns (EXT tier).
 
-- brute-force top-k cosine: broadcast the (small) query set against the
-  full corpus; one pass, no shuffle of the corpus, window-ranked top-k.
-  The verifiable baseline.
+- brute-force top-k cosine: the (small) query set scored against the
+  full corpus in one pass, no shuffle of the corpus, window-ranked
+  top-k over each task's local top-k. The verifiable baseline.
 - LSH-bucketed variant (random hyperplane signs): corpus and queries
   hash to sign-pattern buckets; candidates only from matching buckets,
   then exact re-rank. The 100 TB path: bucket join instead of cross
@@ -21,20 +21,22 @@ parameter change can silently crater recall. The recommended gate is
     audit  = ann_recall(approx, exact)   # (query_id, n_exact, n_hits)
     recall = audit.agg(F.sum("n_hits") / F.sum("n_exact"))
 
-Cost is |sample| brute-force scans (broadcast queries, corpus never
-shuffles) + a skinny pair semi-join — cheap enough to run on every
+Cost is |sample| brute-force scans (queries shipped to every task,
+corpus never shuffles) + a skinny pair semi-join — cheap enough to run on every
 index rebuild. Registered as `similarity_ann_recall` (oracle-checked
 LSH-vs-brute composition).
 
 Numeric policy, two tiers:
 
-- The top-k family (brute force / IVF) scores with float left-to-right
-  folds — the identical accumulation order as the DuckDB oracles, so
-  float scores match bit-for-bit. The folds execute as ORDER-PRESERVING
-  Arrow kernels (functions/vectors.py::dot_arrow and friends:
-  vectorized over rows, sequential over dims — every rounding step
-  identical to the HOF/list_reduce form), because Spark's built-in
-  higher-order functions are CodegenFallback and evaluate interpreted.
+- The float family (brute force, IVF, centroid assignment, PQ
+  codewords, IVF-PQ probes) scores with float left-to-right folds —
+  the DuckDB oracles' accumulation order, so scores match bit-for-bit.
+  Every "score a corpus against a small table, keep the best rows"
+  step runs through ONE core, `_nearest`: a `mapInArrow` block scorer
+  (one elementwise step per dimension, as functions/vectors.py's
+  kernels and the CodegenFallback HOF folds) with one ranking rule —
+  valid scores first, best first, ties to the smaller id, invalid
+  (NULL) scores after every valid one.
 - The SIGNATURE family (banded near-dup blocking + LSH buckets) runs
   on SIG_SCALE-quantized int64 vectors: every dot is an exact integer
   sum, which is order-INDEPENDENT — so determinism no longer depends
@@ -62,7 +64,6 @@ from syncquill_spark.functions.vectors import (
     cosine_similarity_arrow,
     dot_arrow,
     l2_norm,
-    squared_l2_arrow,
     unit_vector_arrow,
     valid_vector,
 )
@@ -136,6 +137,200 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
+def _list_matrix(col):
+    """(valid, lens, x) for an Arrow list<float|double> array: ``x`` is
+    a float64 (rows, width) matrix, each row zero-padded past its own
+    length (the folds' extra +0.0 steps are exact no-ops), and
+    ``valid[i]`` is False where row i is NULL or holds a NULL or
+    non-finite component — the rows `_stack_f64_masked` masks. Such
+    rows are all zero in ``x``; ``lens`` is -1 for NULL rows."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    n = len(col)
+    lens = pc.fill_null(pc.list_value_length(col), -1).to_numpy().astype(np.int64)
+    flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    width = max(int(lens.max()) if n else 0, 0)
+    if n * width == len(flat) and (lens == width).all():
+        x = flat.reshape(n, width)
+    else:
+        ln = np.maximum(lens, 0)
+        rows = np.repeat(np.arange(n), ln)
+        x = np.zeros((n, width))
+        x[rows, np.arange(len(flat)) - (np.cumsum(ln) - ln)[rows]] = flat
+    valid = (lens >= 0) & np.isfinite(x).all(axis=1)
+    return valid, lens, np.where(valid[:, None], x, 0.0)
+
+
+def _nearest(
+    big: DataFrame,
+    small: DataFrame,
+    metric: str,
+    n: int,
+    per: str,
+    key: str | None = None,
+) -> DataFrame:
+    """The float similarity family's one nearest-rows core: score every
+    ``big`` row against the ``small`` rows (those with the same ``key``
+    value, when given) by ``metric`` — ``"dot"``, ``"cosine"`` or
+    ``"l2"`` (squared) — and keep the ``n`` best pairs. ``big`` and
+    ``small`` each lead with an (id, vector) column pair.
+
+    - ``per="big"``: each big row keeps its ``n`` best small rows
+      (assignment, probes): all of ``big``'s columns, the small id and
+      ``_score``, emitted by the scoring task (no shuffle, no window).
+    - ``per="small"``: each small id keeps its ``n`` best big rows
+      (top-k): (small id, big id, ``_score``, ``rk``). Each task keeps
+      a running top-n per small id, so the global ``row_number`` ranks
+      at most tasks x n rows per id. Invalid pairs are no neighbours
+      and are dropped.
+
+    One ranking rule for both: valid scores first, best first
+    (descending for dot and cosine, ascending for L2, NaN where Spark
+    sorts it), ties to the smaller id, invalid pairs (NULL ``_score``)
+    last. A pair is invalid where the per-pair kernels (`dot_arrow` and
+    friends) yield NULL: a NULL, ragged or non-finite vector, and for
+    cosine a zero-norm one. Scores are bit-identical to those kernels,
+    the HOF folds and DuckDB: the batch x small matrix accumulates one
+    elementwise step per dimension, left to right. The small side is
+    collected once per call and shipped to the tasks as a float64
+    matrix; callers pass only small sides they used to broadcast.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    desc = metric != "l2"
+    sid, bid = small.columns[0], big.columns[0]
+    tbl = small.select(*small.columns[:2], *([key] if key else [])).toArrow()
+    s_ids = tbl.column(0).combine_chunks()
+    s_valid, s_len, s_x = _list_matrix(tbl.column(1).combine_chunks())
+    # dense rank of the small ids, NULL first like Spark's ascending
+    # order: per="big"'s tie-break and per="small"'s group
+    s_rank = pc.rank(
+        s_ids, sort_keys="ascending", null_placement="at_start", tiebreaker="dense"
+    ).to_numpy().astype(np.int64)
+    if key is None:
+        groups = [(None, np.arange(len(s_ids)))]
+    else:
+        s_key = tbl.column(2).to_numpy(zero_copy_only=False)
+        groups = [(k, np.flatnonzero(s_key == k)) for k in np.unique(s_key)]
+    key_at = big.columns.index(key) if key else None
+    # bound each score matrix to ~1M pairs however many small rows
+    step = max(1, (1 << 20) // max(1, len(s_ids)))
+
+    def block(xb, lb, vb, rows):
+        """(scores, valid) of big rows x small ``rows``. A valid pair's
+        length fits both matrices, so columns past the narrower one
+        are zero on every valid pair and are skipped."""
+        w = min(xb.shape[1], s_x.shape[1])
+        xs = s_x[rows]
+        ok = vb[:, None] & s_valid[rows][None, :] & (lb[:, None] == s_len[rows][None, :])
+        acc = np.zeros(ok.shape)
+        if metric == "l2":
+            for j in range(w):
+                t = np.subtract.outer(xb[:, j], xs[:, j])
+                acc = acc + t * t
+            return acc, ok
+        for j in range(w):
+            acc = acc + np.multiply.outer(xb[:, j], xs[:, j])
+        if metric == "cosine":
+            na, nb = np.zeros(len(xb)), np.zeros(len(xs))
+            for j in range(w):
+                na = na + xb[:, j] * xb[:, j]
+                nb = nb + xs[:, j] * xs[:, j]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                acc = acc / np.multiply.outer(np.sqrt(na), np.sqrt(nb))
+            ok &= (na > 0.0)[:, None] & (nb > 0.0)[None, :]
+        return acc, ok
+
+    def top(group, score, ok, tie):
+        """Indices of the ``n`` best pairs per group, group by group."""
+        nan = np.isnan(score) & ok
+        s = np.where(ok & ~nan, score, 0.0)
+        order = np.lexsort(
+            (tie, -s if desc else s, (nan != desc) & ok, ~ok, group)
+        )
+        g = group[order]
+        first = np.r_[True, g[1:] != g[:-1]]
+        start = np.maximum.accumulate(np.where(first, np.arange(len(g)), 0))
+        return order[np.arange(len(g)) - start < n]
+
+    def pairs(chunk):
+        """(big row, small row, score, valid) of every scored pair, or
+        None when there is none."""
+        if n <= 0:
+            return None
+        vb, lb, xb = _list_matrix(chunk.column(1))
+        if key is not None:
+            bkey = chunk.column(key_at).to_numpy(zero_copy_only=False)
+        parts = []
+        for k, rows in groups:
+            sel = np.arange(len(vb)) if key is None else np.flatnonzero(bkey == k)
+            if len(sel) and len(rows):
+                sc, ok = block(xb[sel], lb[sel], vb[sel], rows)
+                parts.append((np.repeat(sel, len(rows)), np.tile(rows, len(sel)),
+                              sc.ravel(), ok.ravel()))
+        return [np.concatenate(p) for p in zip(*parts)] if parts else None
+
+    def chunks(batches):
+        for batch in batches:
+            for lo in range(0, batch.num_rows, step):
+                chunk = batch.slice(lo, step)
+                p = pairs(chunk)
+                if p is not None:
+                    yield chunk, p
+
+    if per == "big":
+        schema = StructType(
+            big.schema.fields + [small.schema[sid], StructField("_score", DoubleType())]
+        )
+
+        def run(batches):
+            for chunk, (i, j, sc, ok) in chunks(batches):
+                keep = top(i, sc, ok, s_rank[j])
+                yield pa.RecordBatch.from_arrays(
+                    chunk.take(pa.array(i[keep])).columns + [
+                        s_ids.take(pa.array(j[keep])),
+                        pa.array(sc[keep], mask=~ok[keep]),
+                    ],
+                    names=schema.names,
+                )
+
+        return _spread(big).mapInArrow(run, schema)
+
+    schema = StructType(
+        [small.schema[sid], big.schema[bid], StructField("_score", DoubleType())]
+    )
+
+    def run(batches):
+        best = None  # running top-n: (small row, score, big ids)
+        for chunk, (i, j, sc, ok) in chunks(batches):
+            j, sc, ids = j[ok], sc[ok], chunk.column(0).take(pa.array(i[ok]))
+            if best is not None:
+                j, sc = np.concatenate([best[0], j]), np.concatenate([best[1], sc])
+                ids = pa.concat_arrays([best[2], ids])
+            if len(j):
+                keep = top(s_rank[j], sc, np.ones(len(j), bool),
+                           ids.to_numpy(zero_copy_only=False))
+                best = j[keep], sc[keep], ids.take(pa.array(keep))
+        if best is not None:
+            yield pa.RecordBatch.from_arrays(
+                [s_ids.take(pa.array(best[0])), best[2], pa.array(best[1])],
+                names=schema.names,
+            )
+
+    w = Window.partitionBy(sid).orderBy(
+        F.col("_score").desc() if desc else F.col("_score").asc(), F.col(bid).asc()
+    )
+    return (
+        _spread(big).mapInArrow(run, schema)
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= n)
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -146,38 +341,17 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query vector.
 
-    Broadcast-join the query set (must be small: k queries x corpus is
-    the work, corpus never shuffles); rank per query with a window over
-    the query partition; deterministic tie-break on neighbor id.
+    The query set is the small side of `_nearest` (collected once; the
+    corpus never shuffles); each scoring task keeps its own top-k per
+    query, and a window ranks those; deterministic tie-break on
+    neighbor id. Rows whose embedding is NULL / ragged / non-finite /
+    zero-norm are never neighbors.
     Output: (query_id, neighbor_id, rk) — ints only, hash-stable.
     """
-    q = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias("_qvec")
-    )
-    c = _spread(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec"))
-    )
-    # Arrow fold kernel: bit-identical to the HOF cosine (same
-    # accumulation order) at numpy speed — the score feeds a ranking,
-    # so cross-engine bit-equality is load-bearing, and the per-pair
-    # interpreted fold was the whole query's hot loop.
-    scored = c.join(F.broadcast(q)).select(
-        query_id_col,
-        "neighbor_id",
-        cosine_similarity_arrow(F.col("_qvec"), F.col("_cvec")).alias("_score"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        # NULL scores (rows whose embedding is NULL / ragged /
-        # non-finite — the kernels mask them, r13 boundary battery)
-        # are not neighbors: drop BEFORE ranking, or they'd fill
-        # trailing ranks whenever k exceeds the valid candidates
-        scored.filter(F.col("_score").isNotNull())
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(query_id_col, "neighbor_id", "rk")
+    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
+    q = queries.select(F.col(query_id_col), F.col(vec_col))
+    return _nearest(c, q, "cosine", k, "small").select(
+        query_id_col, "neighbor_id", "rk"
     )
 
 
@@ -595,50 +769,10 @@ def semantic_dedup_pairs(
     Output: (id_a, id_b, cell_id) with id_a < id_b — ints only,
     hash-stable.
     """
-    hashed = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).alias("_cv"),
-        F.md5(F.col(id_col).cast("string")).alias("_h"),
-    )
-    cents0 = hashed.orderBy("_h", id_col).limit(n_cells)
-    w_cells = Window.orderBy("_h", id_col)  # n_cells rows — single partition is fine
-    cents = (
-        cents0.withColumn("cell_id", F.row_number().over(w_cells))
-        .withColumn("_nrm", l2_norm(F.col("_cv")))
-        .select(
-            "cell_id",
-            # same guard as the Lloyd-mean normalization: a sampled
-            # zero-norm (or NULL) vector must yield a NULL centroid,
-            # not an ANSI 0/0 job abort (r14 battery find — the
-            # initial sample lacked the _mnrm > 0 guard the refine
-            # loop has). NULL centroids score NULL against everything
-            # and NULL sorts last under desc, so degenerate cells are
-            # never probed or assigned; on clean corpora the WHEN
-            # always takes the same branch — values bit-identical.
-            F.when(
-                F.col("_nrm") > 0,
-                F.transform(
-                    F.col("_cv"), lambda x: x.cast("double") / F.col("_nrm")
-                ),
-            ).alias("_ucv"),
-        )
-    )
-    w_assign = Window.partitionBy(id_col).orderBy(
-        F.col("_cs").desc(), F.col("cell_id").asc()
-    )
-    assigned = (
-        _spread(corpus.select(F.col(id_col), F.col(vec_col)))
-        .join(F.broadcast(cents))
-        .select(
-            F.col(id_col),
-            "cell_id",
-            F.col(vec_col),
-            dot_arrow(F.col(vec_col), F.col("_ucv")).alias("_cs"),
-        )
-        .withColumn("_rn", F.row_number().over(w_assign))
-        .filter(F.col("_rn") == 1)
-        .select(F.col(id_col), "cell_id", F.col(vec_col))
-    )
+    cents = _ivf_centroids(corpus, n_cells, 0, id_col, vec_col)
+    assigned = _nearest(
+        corpus.select(F.col(id_col), F.col(vec_col)), cents, "dot", 1, "big"
+    ).select(F.col(id_col), "cell_id", F.col(vec_col))
     # quantized form for the verify; bands/planes are irrelevant here
     # (only q and n2 are consumed), so the cheapest kernel config.
     sig = _make_sig_udf(1, 1, dim)
@@ -727,18 +861,16 @@ def ivf_topk(
     3. **Probe**: each query scores the same centroid set and keeps its
        `nprobe` best cells; candidates are corpus rows in probed cells
        only — the cross product never materializes.
-    4. **Verify**: exact cosine re-rank within candidates, window
-       top-k per query. Same fold math as `brute_force_topk`, so scores
-       are bit-identical to the DuckDB oracle.
+    4. **Verify**: exact cosine re-rank within candidates, top-k per
+       query. Same fold math as `brute_force_topk`, so scores are
+       bit-identical to the DuckDB oracle.
 
-    Scale shape: centroids are O(n_cells·dim) — broadcast; assignment
-    is one broadcast nested-loop pass (no corpus shuffle) + a skinny
-    (id, cell, score) argmax agg; the candidate join is an equi-join on
-    cell_id (AQE handles fat cells). At 1000-executor scale you would
-    additionally collect the centroid table into literal arrays to fold
-    assignment into a single zero-shuffle projection — kept in-plan
-    here so the whole query (centroid choice included) stays
-    declarative and oracle-checkable at any scale factor.
+    Scale shape: every step is one `_nearest` pass. Centroids are
+    O(n_cells·dim) and the probed (query, cell) rows are
+    |queries|·nprobe — each collected once and shipped to the tasks.
+    Assignment emits one row per corpus row where it is scored (no
+    shuffle); candidate scoring is keyed by cell_id in the same stage,
+    and only each task's top-k per query reaches the final window.
 
     ``refine_iters`` runs that many spherical-k-means (Lloyd)
     refinement passes over the sampled centroids before the final
@@ -749,7 +881,7 @@ def ivf_topk(
     exact arithmetic, floor(x*S + 0.5) half-up — round() tie rules
     differ across engines), and a cell that loses all its vectors (or
     degenerates to a zero mean) keeps its previous centroid. Each
-    iteration costs one broadcast assignment pass + one skinny
+    iteration costs one `_nearest` assignment pass + one skinny
     (cell, pos) aggregation — no corpus shuffle.
 
     ``centroids``: pass a prebuilt (cell_id, centroid) index
@@ -761,62 +893,42 @@ def ivf_topk(
     Output: (query_id, neighbor_id, rk) — ints only, hash-stable.
     """
     if centroids is not None:
-        cents = centroids.select(
-            "cell_id", F.col("centroid").alias("_ucv")
-        )
+        cents = centroids.select("cell_id", F.col("centroid").alias("_ucv"))
     else:
-        # NOTE (r16 optimization round): a _materialize_small persist
-        # here (cents has two broadcast consumers) was implemented,
-        # A/B-measured flat at sf0.1, and REVERTED — it saves one
-        # corpus TakeOrdered of this query's eight corpus passes, too
-        # small to justify spending a driver-window slot on the two
-        # callers' plan change (window-capacity policy above).
         cents = _ivf_centroids(corpus, n_cells, refine_iters, id_col, vec_col)
-
-    def best_cells(side: DataFrame, side_id: str, n: int) -> DataFrame:
-        """Per row of `side`: its `n` highest-dot cells (ties → lower
-        cell_id). Broadcast NL join against the tiny centroid table."""
-        scored = side.join(F.broadcast(cents)).select(
-            side_id,
-            "cell_id",
-            F.col(vec_col).alias(vec_col),
-            dot_arrow(F.col(vec_col), F.col("_ucv")).alias("_cs"),
-        )
-        w = Window.partitionBy(side_id).orderBy(
-            F.col("_cs").desc(), F.col("cell_id").asc()
-        )
-        return (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= n)
-            .select(side_id, "cell_id", vec_col)
-        )
-
-    assigned = best_cells(
-        _spread(corpus.select(F.col(id_col).alias("neighbor_id"), vec_col)),
-        "neighbor_id",
-        1,
-    ).withColumnRenamed(vec_col, "_cvec")
-    probed = best_cells(
-        queries.select(query_id_col, vec_col), query_id_col, nprobe
-    ).withColumnRenamed(vec_col, "_qvec")
-
-    scored = assigned.join(F.broadcast(probed), "cell_id").select(
-        query_id_col,
-        "neighbor_id",
-        cosine_similarity_arrow(F.col("_qvec"), F.col("_cvec")).alias("_score"),
+    # corpus rows -> their best cell; queries -> their nprobe best cells
+    assigned = _nearest(
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)),
+        cents, "dot", 1, "big",
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("_score").desc(), F.col("neighbor_id").asc()
+    probed = _nearest(
+        queries.select(F.col(query_id_col), F.col(vec_col)), cents, "dot", nprobe, "big"
+    )
+    return _nearest(
+        assigned.select("neighbor_id", vec_col, "cell_id"),
+        probed.select(query_id_col, vec_col, "cell_id"),
+        "cosine", k, "small", key="cell_id",
+    ).select(query_id_col, "neighbor_id", "rk")
+
+
+def _md5_sample(
+    corpus: DataFrame, n: int, id_col: str, vec_col: str, rank_col: str
+) -> DataFrame:
+    """(rank_col, _cv): the ``n`` corpus rows with the smallest
+    (md5(id), id), numbered 1..n in that order — the family's
+    deterministic "sample without replacement", reproducible in any
+    engine with no RNG state (md5 order is uncorrelated with id order).
+    orderBy+limit is TakeOrdered — a distributed partial top-k, not a
+    global sort; the numbering window sees only n rows."""
+    hashed = corpus.select(
+        F.col(id_col), F.col(vec_col).alias("_cv"),
+        F.md5(F.col(id_col).cast("string")).alias("_h"),
     )
     return (
-        # NULL scores (rows whose embedding is NULL / ragged /
-        # non-finite — the kernels mask them, r13 boundary battery)
-        # are not neighbors: drop BEFORE ranking, or they'd fill
-        # trailing ranks whenever k exceeds the valid candidates
-        scored.filter(F.col("_score").isNotNull())
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(query_id_col, "neighbor_id", "rk")
+        hashed.orderBy("_h", id_col)
+        .limit(n)
+        .withColumn(rank_col, F.row_number().over(Window.orderBy("_h", id_col)))
+        .select(rank_col, "_cv")
     )
 
 
@@ -830,17 +942,8 @@ def _ivf_centroids(
     """(cell_id, _ucv) unit centroids — the build phase shared by
     ivf_topk and ivf_build_index; arithmetic contract documented on
     ivf_topk."""
-    # Deterministic "sample without replacement": total order by
-    # (md5(id), id), take n_cells. orderBy+limit is TakeOrdered — a
-    # distributed partial top-k, not a global sort.
-    hashed = corpus.select(
-        F.col(id_col), F.col(vec_col).alias("_cv"),
-        F.md5(F.col(id_col).cast("string")).alias("_h"),
-    )
-    cents0 = hashed.orderBy("_h", id_col).limit(n_cells)
-    w_cells = Window.orderBy("_h", id_col)  # n_cells rows — single partition is fine
     cents = (
-        cents0.withColumn("cell_id", F.row_number().over(w_cells))
+        _md5_sample(corpus, n_cells, id_col, vec_col, "cell_id")
         .withColumn("_nrm", l2_norm(F.col("_cv")))
         .select(
             "cell_id",
@@ -849,8 +952,8 @@ def _ivf_centroids(
             # not an ANSI 0/0 job abort (r14 battery find — the
             # initial sample lacked the _mnrm > 0 guard the refine
             # loop has). NULL centroids score NULL against everything
-            # and NULL sorts last under desc, so degenerate cells are
-            # never probed or assigned; on clean corpora the WHEN
+            # and `_nearest` ranks NULL scores last, so degenerate cells
+            # are never probed or assigned; on clean corpora the WHEN
             # always takes the same branch — values bit-identical.
             F.when(
                 F.col("_nrm") > 0,
@@ -865,32 +968,13 @@ def _ivf_centroids(
         # unit corpus vectors once; reused by every Lloyd pass.
         # Arrow kernel: same norm-fold + per-element divide rounding
         # as the HOF form (bit-identical), numpy speed per corpus row.
-        # PERSISTED: each Lloyd pass consumes _u twice (assignment dot
-        # + the per-cell mean explode) and every iteration re-reads it
-        # — uncached, the kernel re-evaluated per consumer (observed
-        # as a duplicated ArrowEvalPython), and the cache is also the
-        # pushdown barrier that keeps the eval on |corpus| rows
-        # instead of after the 16x broadcast-centroid replication.
+        # PERSISTED: every Lloyd pass re-reads _u — uncached, the
+        # kernel re-evaluated per pass.
         u = corpus.select(
             F.col(id_col), unit_vector_arrow(F.col(vec_col)).alias("_u")
         ).persist(StorageLevel.MEMORY_AND_DISK)
     for _ in range(refine_iters):
-        w_assign = Window.partitionBy(id_col).orderBy(
-            F.col("_cs").desc(), F.col("cell_id").asc()
-        )
-        assigned_u = (
-            u.join(F.broadcast(cents))
-            .select(
-                id_col,
-                "cell_id",
-                "_u",
-                # Arrow fold kernel — same left-to-right order as the
-                # HOF dot (bit-identical assignment, numpy speed)
-                dot_arrow(F.col("_u"), F.col("_ucv")).alias("_cs"),
-            )
-            .withColumn("_rn", F.row_number().over(w_assign))
-            .filter(F.col("_rn") == 1)
-        )
+        assigned_u = _nearest(u, cents, "dot", 1, "big")
         sums = (
             assigned_u.select("cell_id", F.posexplode("_u").alias("_pos", "_x"))
             .groupBy("cell_id", "_pos")
@@ -924,14 +1008,11 @@ def _ivf_centroids(
             ).alias("_ucv_new"),
         )
         # persist: `cents` is n_cells rows but its lineage is a full
-        # corpus assignment pass; it is consumed by the NEXT iteration
-        # AND broadcast twice downstream (corpus assign + query probe)
-        # — unpersisted, each consumer re-runs the whole Lloyd subtree.
-        # Materialize eagerly (count on n_cells rows) so the previous
-        # iteration's cache can be RELEASED immediately: without this,
-        # n_iter cached frames accumulated per call (and the lazy
-        # persist could be computed concurrently by its first two
-        # consumers).
+        # corpus assignment pass, collected by the NEXT iteration and
+        # twice downstream (corpus assign + query probe). Materialize
+        # eagerly (count on n_cells rows) so the previous iteration's
+        # cache can be RELEASED immediately: without this, n_iter
+        # cached frames accumulated per call.
         prev_cents = cents
         cents = (
             cents.join(new_cents, "cell_id", "left")
@@ -1104,9 +1185,9 @@ def knn_classify(
     query set from a labeled corpus, e.g. topic/quality propagation in
     a training-data pipeline).
 
-    Neighbors come from brute_force_topk (exact, broadcast queries, no
-    corpus shuffle); labels re-attach by neighbor id; the winning label
-    per query is the one with the most votes among the k neighbors,
+    Neighbors come from brute_force_topk (exact, no corpus shuffle);
+    labels re-attach by neighbor id; the winning label per query is
+    the one with the most votes among the k neighbors,
     ties broken by best (lowest) neighbor rank, then smallest label —
     fully deterministic, int-only output.
 
@@ -1157,13 +1238,11 @@ def assign_nearest_centroid(
     accumulate in the same order and produce bit-identical doubles —
     argmin (ties -> smallest label) is then engine-exact.
 
-    Scale shape: the centroid table is |labels| rows — broadcast; the
-    corpus never shuffles (one projection + broadcast join + window
-    over |labels| rows per vector... the argmin is a groupBy on
-    id_col, shuffling |corpus| x |labels| skinny (id, label, dist)
-    rows; for large label spaces switch to a min_by aggregation,
-    which this uses, keeping one row per vector after the map-side
-    combine).
+    Scale shape: the centroid table is |labels| rows, the small side of
+    `_nearest`; the argmin is taken where each vector is scored, so
+    the corpus never shuffles and each vector emits one row. A label
+    whose centroid cannot be scored against a vector (ragged, NULL or
+    non-finite) ranks after every label that can.
 
     Output: (vec_id, nearest_label) — ints only, hash-stable.
     """
@@ -1184,22 +1263,9 @@ def assign_nearest_centroid(
             lambda s: s["_m"],
         ).alias("_c")
     ).select(F.col(label_col).alias("_clabel"), "_c")
-    scored = corpus.select(F.col(id_col), F.col(vec_col).alias("_v")).join(
-        F.broadcast(centroids)
-    )
-    # Arrow fold kernel — same (x-m)*(x-m) left-to-right accumulation
-    # as the HOF form, bit-identical, numpy speed on the hot
-    # (vector x label) scoring pass.
-    d2 = squared_l2_arrow(F.col("_v"), F.col("_c"))
-    return (
-        scored.select(F.col(id_col), F.col("_clabel"), d2.alias("_d2"))
-        .groupBy(id_col)
-        .agg(
-            F.min_by(
-                F.col("_clabel"), F.struct(F.col("_d2"), F.col("_clabel"))
-            ).alias("nearest_label")
-        )
-    )
+    return _nearest(
+        corpus.select(F.col(id_col), F.col(vec_col)), centroids, "l2", 1, "big"
+    ).select(F.col(id_col), F.col("_clabel").alias("nearest_label"))
 
 
 def ann_recall(
@@ -1265,8 +1331,8 @@ def _pq_codebook(
     lloyd_iters: int = 0,
 ) -> DataFrame:
     """(code, sub, _cbv) per-subspace codewords: the k_codes corpus
-    vectors with the smallest (md5(id), id) — `_ivf_centroids`' exact
-    deterministic-sample trick — sliced into m_sub subvectors. Tiny
+    vectors of `_md5_sample` — `_ivf_centroids`' exact deterministic
+    sample — sliced into m_sub subvectors. Tiny
     (m_sub * k_codes rows), always broadcast.
 
     ``lloyd_iters > 0`` refines each subspace's codebook with exact
@@ -1282,20 +1348,13 @@ def _pq_codebook(
     its previous value. Unlike IVF centroids there is NO unit
     normalization — PQ codewords live in raw subvector space.
 
-    Scale shape per iteration: one broadcast join of the m_sub-exploded
-    skinny subvector rows (persisted once, reused every pass) against
-    the tiny codebook, one map-side-combinable argmin, one
-    (sub, code, pos) count/sum aggregation — never a corpus shuffle.
+    Scale shape per iteration: one `_nearest` pass (keyed by sub) of the
+    m_sub-exploded skinny subvector rows (persisted once, reused every
+    pass) against the tiny codebook, one (sub, code, pos) count/sum
+    aggregation — never a corpus shuffle.
     """
     sd = dim // m_sub
-    hashed = corpus.select(
-        F.col(id_col), F.col(vec_col).alias("_cv"),
-        F.md5(F.col(id_col).cast("string")).alias("_h"),
-    )
-    samp = hashed.orderBy("_h", id_col).limit(k_codes)
-    w = Window.orderBy("_h", id_col)  # k_codes rows — single partition fine
-    coded = samp.withColumn("code", F.row_number().over(w))
-    cb = coded.select(
+    cb = _md5_sample(corpus, k_codes, id_col, vec_col, "code").select(
         "code",
         F.posexplode(
             F.array(*[F.slice("_cv", s * sd + 1, sd) for s in range(m_sub)])
@@ -1306,15 +1365,8 @@ def _pq_codebook(
 
     # subvector rows once; every Lloyd pass consumes them twice
     # (assignment argmin + the per-codeword mean explode)
-    vx = (
-        _spread(corpus.select(id_col, vec_col))
-        .select(
-            F.col(id_col),
-            F.posexplode(
-                F.array(*[F.slice(vec_col, s * sd + 1, sd) for s in range(m_sub)])
-            ).alias("sub", "_xv"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    vx = _subvectors(_spread(corpus), m_sub, sd, id_col, vec_col).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     # float -> double up front so refined (double means) and kept
     # (unrefined) codewords stay one array type across iterations
@@ -1323,15 +1375,8 @@ def _pq_codebook(
         F.transform(F.col("_cbv"), lambda x: x.cast("double")).alias("_cbv"),
     )
     for _ in range(lloyd_iters):
-        assigned = (
-            vx.join(F.broadcast(cb), "sub")
-            .withColumn("_d", squared_l2_arrow(F.col("_xv"), F.col("_cbv")))
-            .groupBy(id_col, "sub")
-            .agg(
-                F.min(F.struct(F.col("_d"), F.col("code"))).alias("_best"),
-                F.first("_xv").alias("_xv"),
-            )
-            .select("sub", F.col("_best.code").alias("code"), "_xv")
+        assigned = _nearest(
+            vx, cb.select("code", "_cbv", "sub"), "l2", 1, "big", key="sub"
         )
         sums = (
             assigned.select("sub", "code", F.posexplode("_xv").alias("_pos", "_x"))
@@ -1401,11 +1446,11 @@ def pq_encode(
     same deterministic no-RNG sample, reproducible in any engine —
     sliced per subspace (code j's subvector c_j = sample[j][sub]).
     Assignment is exact nearest-codeword by squared L2 per subspace
-    (ties -> smaller code), with the distance fold Arrow-batched
-    (`squared_l2_arrow` — bit-identical to the interpreted HOF fold
-    and DuckDB's list_reduce, numpy speed per row; the HOF form would
-    be m*k interpreted lambda chains per vector, the hot-surface
-    class the round-5 verdict evicted).
+    (ties -> smaller code), scored by `_nearest` keyed by subspace
+    (bit-identical to the interpreted HOF fold and DuckDB's
+    list_reduce at numpy speed; the HOF form would be m*k interpreted
+    lambda chains per vector, the hot-surface class the round-5
+    verdict evicted).
 
     Output: (vec_id, sub, code, err_q) — err_q is the squared-L2
     quantization error, floor(x*err_scale + 0.5)-quantized to an
@@ -1414,11 +1459,10 @@ def pq_encode(
     err_q/err_scale is the PQ recall-proxy a deployment monitors
     after every codebook rebuild.
 
-    Scale shape: the codebook is m_sub*k_codes tiny rows — broadcast;
-    the corpus explodes to m_sub skinny (id, sub, subvec) rows, joins
-    the broadcast codebook on sub, and the argmin is one map-side
-    combinable (id, sub) min-aggregation. No corpus shuffle beyond
-    the final skinny aggregation; vectors never leave their stage.
+    Scale shape: the codebook is m_sub*k_codes tiny rows, the small
+    side of `_nearest`; the corpus explodes to m_sub skinny (id, sub,
+    subvec) rows, each scored against its subspace's codewords where
+    it is read. No corpus shuffle; vectors never leave their stage.
 
     ``centroids``: a (cell_id, _ucv) unit-centroid index
     (`_ivf_centroids` / `ivf_build_index` renamed) switches on
@@ -1455,7 +1499,8 @@ def pq_encode(
         frame, fcol = corpus.select(id_col, vec_col), vec_col
         extra: list[str] = []
     else:
-        frame = _pq_residual_frame(corpus, centroids, id_col, vec_col)
+        assigned = _nearest(corpus.select(id_col, vec_col), centroids, "dot", 1, "big")
+        frame = _pq_residual_frame(assigned, centroids, id_col, vec_col)
         fcol = "_rv"
         extra = ["cell_id"]
     cb = _pq_codebook(frame, m_sub, k_codes, dim, id_col, fcol, lloyd_iters)
@@ -1464,27 +1509,25 @@ def pq_encode(
         id_col,
         *extra,
         F.col("sub").cast("long").alias("sub"),
-        F.col("_best.code").cast("long").alias("code"),
-        F.floor(F.col("_best._d") * err_scale + F.lit(0.5))
+        F.col("code").cast("long").alias("code"),
+        F.floor(F.col("_score") * err_scale + F.lit(0.5))
         .cast("long")
         .alias("err_q"),
     )
 
 
 def _pq_residual_frame(
-    corpus: DataFrame, cents: DataFrame, id_col: str, vec_col: str
+    assigned: DataFrame, cents: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
-    """(id, cell_id, _rv) — residual vectors x - centroid(cell(x))
-    against a (cell_id, _ucv) unit-centroid index. The subtraction is
-    one exact IEEE op per element (Arrow kernel, no fold), so residual
-    encoding stays as deterministic as the raw path."""
+    """(id, cell_id, _rv) — residual vectors x - centroid(cell(x)) of
+    (id, vec, cell_id) rows assigned against the (cell_id, _ucv)
+    unit-centroid index. The subtraction is one exact IEEE op per element (Arrow
+    kernel, no fold), so residual encoding stays as deterministic as
+    the raw path."""
     from syncquill_spark.functions.vectors import subtract_arrow
 
-    assigned = _pq_assign_cells(corpus, cents, id_col, vec_col)
     return (
-        corpus.select(id_col, vec_col)
-        .join(assigned, id_col)
-        .join(F.broadcast(cents), "cell_id")
+        assigned.join(F.broadcast(cents), "cell_id")
         .select(
             id_col,
             "cell_id",
@@ -1493,27 +1536,18 @@ def _pq_residual_frame(
     )
 
 
-def _pq_assign_cells(
-    corpus: DataFrame, cents: DataFrame, id_col: str, vec_col: str
+def _subvectors(
+    frame: DataFrame, m_sub: int, sd: int, id_col: str, vec_col: str, extra=()
 ) -> DataFrame:
-    """(id, cell_id): argmax dot against unit centroids (ties -> lower
-    cell), as a map-side-combinable min of (-dot, cell_id) structs."""
-    c_scored = _spread(corpus.select(id_col, vec_col)).join(
-        F.broadcast(cents)
-    ).select(
-        id_col,
-        "cell_id",
-        dot_arrow(F.col(vec_col), F.col("_ucv")).alias("_cs"),
-    )
-    return (
-        c_scored.groupBy(id_col)
-        .agg(
-            F.min(
-                F.struct((-F.col("_cs")).alias("_neg"), F.col("cell_id"))
-            ).alias("_b")
-        )
-        .select(id_col, F.col("_b.cell_id").alias("cell_id"))
-    )
+    """(id, _xv, sub, *extra): one row per subspace slice of each
+    vector — the big side of the per-subspace `_nearest` passes."""
+    return frame.select(
+        F.col(id_col),
+        F.posexplode(
+            F.array(*[F.slice(vec_col, s * sd + 1, sd) for s in range(m_sub)])
+        ).alias("sub", "_xv"),
+        *extra,
+    ).select(id_col, "_xv", "sub", *extra)
 
 
 def _pq_best_codes(
@@ -1525,22 +1559,12 @@ def _pq_best_codes(
     vec_col: str,
     extra: list[str],
 ) -> DataFrame:
-    """(id, *extra, sub, _best{_d, code}) nearest-codeword assignment.
-    _spread: the k_codes-way scoring join multiplies work per input
-    split; an under-split local read would run the Arrow kernel
-    single-task (same rationale as brute_force_topk; no-op at scale)."""
-    vx = _spread(frame.select(id_col, *extra, vec_col)).select(
-        F.col(id_col),
-        *extra,
-        F.posexplode(
-            F.array(*[F.slice(vec_col, s * sd + 1, sd) for s in range(m_sub)])
-        ).alias("sub", "_xv"),
-    )
-    scored = vx.join(F.broadcast(cb), "sub").withColumn(
-        "_d", squared_l2_arrow(F.col("_xv"), F.col("_cbv"))
-    )
-    return scored.groupBy(id_col, *extra, "sub").agg(
-        F.min(F.struct(F.col("_d"), F.col("code"))).alias("_best")
+    """(id, _xv, sub, *extra, code, _score): each subvector's nearest
+    codeword by squared L2 (ties -> smaller code)."""
+    return _nearest(
+        _subvectors(frame, m_sub, sd, id_col, vec_col, extra),
+        cb.select("code", "_cbv", "sub"),
+        "l2", 1, "big", key="sub",
     )
 
 
@@ -1554,34 +1578,17 @@ def _pq_code_arrays(
 ) -> DataFrame:
     """(id, _codes array<long>): per-vector nearest-codeword ids, one
     entry per subspace in subspace order — `_pq_best_codes`' exact
-    assignment (the same min(struct(_d, code)) over the same scored
-    rows, same tie-break) collapsed into ONE map-side-combinable
-    groupBy(id) with m_sub conditional mins. The ADC serve path then
-    shuffles one skinny row per vector instead of m_sub, and scores by
-    array lookup instead of a per-subspace 3-key join plus a second
-    aggregation (guide §2.3: aggregate before you shuffle)."""
-    vx = _spread(frame.select(id_col, vec_col)).select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(*[F.slice(vec_col, s * sd + 1, sd) for s in range(m_sub)])
-        ).alias("sub", "_xv"),
-    )
-    scored = vx.join(F.broadcast(cb), "sub").withColumn(
-        "_d", squared_l2_arrow(F.col("_xv"), F.col("_cbv"))
-    )
-    best = scored.groupBy(id_col).agg(
-        *[
-            F.min(
-                F.when(F.col("sub") == s, F.struct(F.col("_d"), F.col("code")))
-            ).alias(f"_b{s}")
-            for s in range(m_sub)
-        ]
-    )
-    return best.select(
-        F.col(id_col),
+    assignment collapsed into ONE map-side-combinable groupBy(id) with
+    m_sub conditional picks. The ADC serve path then shuffles one
+    skinny row per vector instead of m_sub, and scores by array lookup
+    instead of a per-subspace 3-key join plus a second aggregation
+    (guide §2.3: aggregate before you shuffle)."""
+    best = _pq_best_codes(frame, cb, m_sub, sd, id_col, vec_col, [])
+    return best.groupBy(id_col).agg(
         F.array(
-            *[F.col(f"_b{s}.code").cast("long") for s in range(m_sub)]
-        ).alias("_codes"),
+            *[F.min(F.when(F.col("sub") == s, F.col("code"))).cast("long")
+              for s in range(m_sub)]
+        ).alias("_codes")
     )
 
 
@@ -1627,6 +1634,24 @@ def _adc_lut_arrays(
         F.transform(F.array_sort(F.collect_list("_e")), lambda s: s["q"]).alias(
             "_lut"
         )
+    )
+
+
+def _adc_probe(
+    queries: DataFrame,
+    cents: DataFrame,
+    nprobe: int,
+    query_id_col: str,
+    score_scale: int,
+) -> DataFrame:
+    """(query_id, cell_id, _qc): each query's ``nprobe`` best cells by
+    dot on the unit centroids (ties -> lower cell), with the dot
+    floor-half-up-quantized like the ADC partials — the centroid term
+    of a residual score."""
+    return _nearest(queries, cents, "dot", nprobe, "big").select(
+        query_id_col,
+        "cell_id",
+        F.floor(F.col("_score") * score_scale + F.lit(0.5)).cast("long").alias("_qc"),
     )
 
 
@@ -1697,13 +1722,14 @@ def ivfpq_topk(
     False = plain PQ on raw vectors (the path the registry row gates);
     same composition and determinism story either way.
 
-    Scale shape: centroids and codebooks are tiny broadcasts; corpus
-    assignment and encoding are map-side-combinable aggregations over
-    skinny int64 rows; the LUT is |queries| * m_sub * k_codes rows
-    (bounded by the serving batch — broadcast); the candidate join is
-    an equi-join on cell_id; final top-k is a per-query window over
-    candidates. The corpus' float vectors are read exactly once (to
-    build codes + cells) and never shuffle. The one remaining
+    Scale shape: centroids and codebooks are tiny small sides of
+    `_nearest`; corpus assignment emits one row per vector where it is
+    scored, encoding is one map-side-combinable aggregation over skinny
+    int64 rows; the LUT is |queries| * m_sub * k_codes rows (bounded by
+    the serving batch — broadcast); the candidate join is an equi-join
+    on cell_id; final top-k is a per-query window over candidates.
+    The corpus' float vectors are read exactly once (to build codes +
+    cells) and never shuffle. The one remaining
     corpus-sized (skinny) shuffle here is the candidate⋈codes join on
     vec_id — at deployment use `ivfpq_build_index` +
     `ivfpq_topk_from_index`: codes persisted cell-co-located
@@ -1722,7 +1748,7 @@ def ivfpq_topk(
     # centroids and codebook are tiny frames with full-corpus lineage
     # and two consumers each (assignment + probe; encoding + LUT):
     # materialize each once instead of re-running the corpus
-    # TakeOrdered per broadcast (guide §5 / §2.4)
+    # TakeOrdered per consumer (guide §5 / §2.4)
     cents = _materialize_small(_ivf_centroids(corpus, n_cells, 0, id_col, vec_col))
     sd = dim // m_sub
 
@@ -1731,17 +1757,14 @@ def ivfpq_topk(
     # the corpus once, not twice
     queries = _materialize_small(queries.select(query_id_col, vec_col))
 
-    # corpus -> best cell (argmax dot on unit centroids; ties -> lower
-    # cell): min of (-dot, cell_id) structs, map-side combinable.
-    # _spread: n_cells-way broadcast join per corpus row (see pq_encode)
-    assigned = _pq_assign_cells(corpus, cents, id_col, vec_col)
+    assigned = _nearest(corpus.select(id_col, vec_col), cents, "dot", 1, "big")
 
     if residual:
         # residual PQ: quantize x - centroid(cell(x)); the ADC score
         # decomposes as dot(q, c_cell) + sum_sub dot(q_sub, codeword)
         # — the centroid term rides on the probed (query, cell) pairs,
         # quantized like the partials so the sum stays exact-integer
-        frame, fcol = _pq_residual_frame(corpus, cents, id_col, vec_col), "_rv"
+        frame, fcol = _pq_residual_frame(assigned, cents, id_col, vec_col), "_rv"
     else:
         frame, fcol = corpus.select(id_col, vec_col), vec_col
     cb = _materialize_small(
@@ -1756,27 +1779,11 @@ def ivfpq_topk(
         queries, cb, m_sub, sd, query_id_col, vec_col, score_scale
     )
 
-    q_scored = queries.join(F.broadcast(cents)).select(
-        query_id_col,
-        "cell_id",
-        dot_arrow(F.col(vec_col), F.col("_ucv")).alias("_qs"),
-    )
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.col("_qs").desc(), F.col("cell_id").asc()
-    )
-    probed = (
-        q_scored.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= nprobe)
-        .select(
-            query_id_col,
-            "cell_id",
-            F.floor(F.col("_qs") * score_scale + F.lit(0.5))
-            .cast("long")
-            .alias("_qc"),
-        )
-    )
+    probed = _adc_probe(queries, cents, nprobe, query_id_col, score_scale)
 
-    cands = probed.join(assigned, "cell_id").select(query_id_col, id_col, "_qc")
+    cands = probed.join(assigned.select(id_col, "cell_id"), "cell_id").select(
+        query_id_col, id_col, "_qc"
+    )
     scored = (
         cands.join(codes, id_col)
         .join(F.broadcast(lut), query_id_col)
@@ -1864,9 +1871,9 @@ def ivfpq_build_index(
         # tiny, corpus-lineage, two consumers (cell assignment + the
         # returned centroids part): materialize once — see ivfpq_topk
         cents = _materialize_small(_ivf_centroids(corpus, n_cells, 0, id_col, vec_col))
-    assigned = _pq_assign_cells(corpus, cents, id_col, vec_col)
+    assigned = _nearest(corpus.select(id_col, vec_col), cents, "dot", 1, "big")
     if residual:
-        frame, fcol = _pq_residual_frame(corpus, cents, id_col, vec_col), "_rv"
+        frame, fcol = _pq_residual_frame(assigned, cents, id_col, vec_col), "_rv"
     else:
         frame, fcol = corpus.select(id_col, vec_col), vec_col
     if codebook is not None:
@@ -1880,7 +1887,7 @@ def ivfpq_build_index(
     return {
         "centroids": cents.select("cell_id", F.col("_ucv").alias("centroid")),
         "codebook": cb.select("code", "sub", F.col("_cbv").alias("cbv")),
-        "codes": codes.join(assigned, id_col).select(
+        "codes": codes.join(assigned.select(id_col, "cell_id"), id_col).select(
             "cell_id", id_col, F.col("_codes").alias("codes")
         ),
     }
@@ -1978,25 +1985,7 @@ def ivfpq_topk_from_index(
         queries, cb, m_sub, sd, query_id_col, vec_col, score_scale
     )
 
-    q_scored = queries.join(F.broadcast(cents)).select(
-        query_id_col,
-        "cell_id",
-        dot_arrow(F.col(vec_col), F.col("_ucv")).alias("_qs"),
-    )
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.col("_qs").desc(), F.col("cell_id").asc()
-    )
-    probed = (
-        q_scored.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= nprobe)
-        .select(
-            query_id_col,
-            "cell_id",
-            F.floor(F.col("_qs") * score_scale + F.lit(0.5))
-            .cast("long")
-            .alias("_qc"),
-        )
-    )
+    probed = _adc_probe(queries, cents, nprobe, query_id_col, score_scale)
 
     # THE layout payoff: candidates + codes in one broadcast join on
     # the co-location key — DPP prunes unprobed cell partitions — and
@@ -2055,8 +2044,8 @@ def exact_rerank(
     at the join), and the query vectors broadcast onto the survivors.
     Exact scoring runs on |queries| x R rows instead of |corpus| — at
     a 1B-vector corpus with 1k queries x R=100 that is 1e5 exact
-    cosines instead of 1e12. Scoring uses the same order-preserving
-    Arrow cosine as `brute_force_topk`, so the re-ranked output equals
+    cosines instead of 1e12. Scoring uses the same left-to-right
+    cosine fold as `brute_force_topk`, so the re-ranked output equals
     brute force RESTRICTED to the candidate set, row for row (the
     equivalence the unit test pins; ranking ties break by neighbor
     id).

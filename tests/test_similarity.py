@@ -453,11 +453,14 @@ def test_signature_kernel_matches_pure_python_reference(spark):
 
 
 def test_arrow_fold_kernels_bit_identical_to_hof_folds(spark):
-    """dot_arrow / cosine_similarity_arrow / squared_l2_arrow /
-    unit_vector_arrow must equal the interpreted higher-order-function
-    folds EXACTLY (==, not approx) on random data — the
-    order-preserving-fold guarantee that lets the kernels replace the
-    HOF forms without touching any oracle."""
+    """dot_arrow / cosine_similarity_arrow / unit_vector_arrow and the
+    nearest-rows core's three metrics (`_nearest`: dot, cosine,
+    squared L2) must equal the interpreted higher-order-function folds
+    EXACTLY (==, not approx) on random data — the order-preserving-fold
+    guarantee that lets the kernels replace the HOF forms without
+    touching any oracle. On NULL / ragged / NULL-element / NaN / +-inf
+    / zero-norm rows the core must mask (NULL score) exactly the pairs
+    the per-pair kernels mask; squared L2 masks what dot masks."""
     import numpy as np
 
     from pyspark.sql import functions as F
@@ -468,9 +471,9 @@ def test_arrow_fold_kernels_bit_identical_to_hof_folds(spark):
         dot,
         dot_arrow,
         l2_norm,
-        squared_l2_arrow,
         unit_vector_arrow,
     )
+    from syncquill_spark.operators.similarity import _nearest
 
     rng = np.random.default_rng(23)
     rows = [
@@ -478,6 +481,14 @@ def test_arrow_fold_kernels_bit_identical_to_hof_folds(spark):
          rng.normal(size=33).tolist())
         for i in range(60)
     ]
+    good = rng.normal(size=33).tolist()
+    patho = [
+        (None, good), (good, None), (good, good[:32]), (good[:5], good[1:6]),
+        (good[:32] + [None], good), (good[:32] + [float("nan")], good),
+        (good, good[:32] + [float("inf")]), (good[:32] + [float("-inf")], good),
+        ([0.0] * 33, good), ([0.0] * 33, [0.0] * 33), (good, [0.0] * 33),
+    ]
+    rows += [(100 + i, a, b) for i, (a, b) in enumerate(patho)]
     df = spark.createDataFrame(rows, "i long, a array<double>, b array<double>")
     sl2_hof = F.aggregate(
         F.zip_with(
@@ -487,24 +498,44 @@ def test_arrow_fold_kernels_bit_identical_to_hof_folds(spark):
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    unit_hof = F.transform(
+    # the zero rows would abort the HOF unit form (ANSI 0/0)
+    unit_hof = F.when(F.col("i") < 100, F.transform(
         F.col("a"), lambda x: x.cast("double") / l2_norm(F.col("a"))
-    )
-    out = df.select(
-        dot(F.col("a"), F.col("b")).alias("d1"),
-        dot_arrow(F.col("a"), F.col("b")).alias("d2"),
-        cosine_similarity(F.col("a"), F.col("b")).alias("c1"),
-        cosine_similarity_arrow(F.col("a"), F.col("b")).alias("c2"),
-        sl2_hof.alias("s1"),
-        squared_l2_arrow(F.col("a"), F.col("b")).alias("s2"),
-        unit_hof.alias("u1"),
-        unit_vector_arrow(F.col("a")).alias("u2"),
-    ).collect()
-    for r in out:
-        assert r.d1 == r.d2
-        assert r.c1 == r.c2
-        assert r.s1 == r.s2
-        assert list(r.u1) == list(r.u2)
+    ))
+    out = {
+        r.i: r
+        for r in df.select(
+            "i",
+            dot(F.col("a"), F.col("b")).alias("d1"),
+            dot_arrow(F.col("a"), F.col("b")).alias("d2"),
+            cosine_similarity(F.col("a"), F.col("b")).alias("c1"),
+            cosine_similarity_arrow(F.col("a"), F.col("b")).alias("c2"),
+            sl2_hof.alias("s1"),
+            unit_hof.alias("u1"),
+            unit_vector_arrow(F.col("a")).alias("u2"),
+        ).collect()
+    }
+    # the core scores each row's a against its own b only (key = i)
+    big = df.select("i", "a", F.col("i").alias("k"))
+    small = df.select(F.col("i").alias("j"), "b", F.col("i").alias("k"))
+    core = {
+        m: {r.i: r._score for r in _nearest(big, small, m, 1, "big", key="k").collect()}
+        for m in ("dot", "cosine", "l2")
+    }
+    for i, r in out.items():
+        for m, hof, kernel in (("dot", r.d1, r.d2), ("cosine", r.c1, r.c2),
+                               ("l2", r.s1, r.d2)):
+            assert (core[m][i] is None) == (kernel is None), (m, i)
+            if kernel is not None:
+                assert core[m][i] == hof, (m, i)
+        if i < 100:
+            assert r.d1 == r.d2
+            assert r.c1 == r.c2
+            assert list(r.u1) == list(r.u2)
+    # every pathological pair is masked but the short equal-length one
+    # (row 103), which is valid and scored against zero padding
+    masked = {i for i, v in core["cosine"].items() if v is None}
+    assert masked == set(range(100, 100 + len(patho))) - {103}, sorted(masked)
 
 
 def test_cosine_hof_and_arrow_agree_on_zero_norm(spark):
@@ -1555,3 +1586,49 @@ def test_ivfpq_code_arrays_match_row_codes(spark, sf_dir):
     assert arrays and len(rows) == 8 * len(arrays)
     for r in rows:
         assert arrays[r.vec_id][r.sub] == r.code
+
+
+def test_nearest_rows_answers_independent_of_layout(spark):
+    """The nearest-rows core keeps a top-k per scoring task and merges
+    them, so its answers must not depend on physical layout: partition
+    count, input order or the session's shuffle width. The corpus holds
+    every vector three times under different ids, so equal scores fall
+    in different partitions and only the id tie-break orders them."""
+    import numpy as np
+
+    from syncquill_spark.operators.similarity import (
+        assign_nearest_centroid,
+        ivf_topk,
+        pq_encode,
+    )
+
+    rng = np.random.default_rng(5)
+    vecs = rng.normal(size=(40, 16)).round(2).tolist()
+    corpus = spark.createDataFrame(
+        [(i, vecs[i % 40], i % 3) for i in range(120)],
+        "vec_id long, embedding array<double>, label long",
+    )
+    queries = spark.createDataFrame(
+        [(1000 + i, vecs[i * 7]) for i in range(5)],
+        "query_id long, embedding array<double>",
+    )
+
+    def answers(c):
+        return [
+            sorted(brute_force_topk(c, queries, k=5).collect()),
+            sorted(ivf_topk(c, queries, k=5, n_cells=4, nprobe=2).collect()),
+            sorted(pq_encode(c, m_sub=4, k_codes=8, dim=16).collect()),
+            sorted(assign_nearest_centroid(c).collect()),
+        ]
+
+    want = answers(corpus.repartition(1))
+    assert len(want[0]) == 25 and len(want[3]) == 120
+    for c in (corpus.repartition(7), corpus.orderBy(F.rand(11))):
+        assert answers(c) == want
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in ("3", "61"):
+            spark.conf.set("spark.sql.shuffle.partitions", n)
+            assert answers(corpus) == want, n
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", width)

@@ -464,6 +464,52 @@ def case_specs():
     add("ivfpq_pathological_ranks", _ivfpq_patho_ranks(False))
     add("ivfpq_residual_pathological_ranks", _ivfpq_patho_ranks(True))
 
+    # An IVF index built over every patho row plus 8 valid ones samples
+    # the NULL, NaN, Inf, ragged and zero rows as centroids too; such a
+    # cell scores NULL against every valid vector. Residual PQ encoding
+    # against that index used to rank the NULL scores FIRST and put all
+    # 8 valid vectors in a NULL-centroid cell, with NULL err_q.
+    def _pq_encode_skips_unscorable_cells(ctx):
+        valid = ctx.spark.createDataFrame(
+            [(1000 + i, [float((i * 7 + j * 3) % 11 - 5) for j in range(64)])
+             for i in range(8)],
+            "vec_id long, embedding array<double>")
+        sim, corpus = _sim(), ctx.patho.union(valid)
+        index = sim.ivf_build_index(corpus, n_cells=15)
+        bad = {
+            r.cell_id for r in index.collect()
+            if r.centroid is None or len(r.centroid) != 64
+            or any(c != c or abs(c) == float("inf") for c in r.centroid)
+        }
+        assert bad, "no unscorable centroid sampled"
+        got = sim.pq_encode(corpus, centroids=index.select(
+            "cell_id", F.col("centroid").alias("_ucv"))).collect()
+        assert {r.vec_id for r in got} == {1, 2} | set(range(1000, 1008))
+        assert not {r.cell_id for r in got} & bad, sorted(bad)
+        assert all(r.err_q is not None for r in got)
+        return len(got)
+
+    add("pq_encode_never_assigns_unscorable_cell", _pq_encode_skips_unscorable_cells)
+
+    # A label whose rows are all ragged gets a ragged centroid that no
+    # 64-d vector can be scored against; min_by ranked that NULL
+    # distance first and gave every vector that label.
+    def _nearest_centroid_skips_ragged_label(ctx):
+        base = ctx.base_vec
+        rows = [(1, base, 1), (2, [c + 1.0 for c in base], 1),
+                (3, [-c for c in base], 2), (4, base[:63], 0)]
+        got = {
+            r.vec_id: r.nearest_label
+            for r in _sim().assign_nearest_centroid(ctx.spark.createDataFrame(
+                rows, "vec_id long, embedding array<double>, label long"
+            )).collect()
+        }
+        assert got == {1: 1, 2: 1, 3: 2, 4: 0}, got
+        return len(got)
+
+    add("nearest_centroid_never_picks_ragged_label",
+        _nearest_centroid_skips_ragged_label)
+
     # --- corrupt media payloads (the triage gate) ----------------------
     def _mm():
         import syncquill_spark.operators.multimodal as m
