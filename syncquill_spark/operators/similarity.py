@@ -49,7 +49,11 @@ Numeric policy, two tiers:
   that interpreted per-element cost IS the bottleneck. The numpy
   matmul runs at memory bandwidth, one Arrow batch at a time, and the
   quantized integers reproduce exactly in any engine regardless of
-  summation order.
+  summation order. Every signature site — the near-dup operators,
+  `lsh_topk`, `semantic_dedup_pairs` and the streaming vector gate —
+  composes ONE core, shaped like the MinHash core in operators/dedup.py:
+  the key builder `_srp_keys`, the self/cross pair cores and the verify
+  tail `_srp_verified`, the only place the int64 dot is taken.
 """
 
 from __future__ import annotations
@@ -182,19 +186,20 @@ def _nearest(
     - ``per="small"``: each small id keeps its ``n`` best big rows
       (top-k): (small id, big id, ``_score``, ``rk``). Each task keeps
       a running top-n per small id, so the global ``row_number`` ranks
-      at most tasks x n rows per id. Invalid pairs are no neighbours
-      and are dropped.
+      at most tasks x n rows per id.
 
-    One ranking rule for both: valid scores first, best first
-    (descending for dot and cosine, ascending for L2, NaN where Spark
-    sorts it), ties to the smaller id, invalid pairs (NULL ``_score``)
-    last. A pair is invalid where the per-pair kernels (`dot_arrow` and
-    friends) yield NULL: a NULL, ragged or non-finite vector, and for
-    cosine a zero-norm one. Scores are bit-identical to those kernels,
-    the HOF folds and DuckDB: the batch x small matrix accumulates one
-    elementwise step per dimension, left to right. The small side is
-    collected once per call and shipped to the tasks as a float64
-    matrix; callers pass only small sides they used to broadcast.
+    One rule for both: invalid pairs are no neighbours and are dropped
+    before ranking, so a big row that no small row can score emits
+    nothing; valid scores rank best first (descending for dot and
+    cosine, ascending for L2, NaN where Spark sorts it), ties to the
+    smaller id. A pair is invalid where the per-pair kernels
+    (`dot_arrow` and friends) yield NULL: a NULL, ragged or non-finite
+    vector, and for cosine a zero-norm one. Scores are bit-identical
+    to those kernels, the HOF folds and DuckDB: the batch x small
+    matrix accumulates one elementwise step per dimension, left to
+    right. The small side is collected once per call and shipped to
+    the tasks as a float64 matrix; callers pass only small sides they
+    used to broadcast.
     """
     import numpy as np
     import pyarrow as pa
@@ -245,21 +250,19 @@ def _nearest(
             ok &= (na > 0.0)[:, None] & (nb > 0.0)[None, :]
         return acc, ok
 
-    def top(group, score, ok, tie):
+    def top(group, score, tie):
         """Indices of the ``n`` best pairs per group, group by group."""
-        nan = np.isnan(score) & ok
-        s = np.where(ok & ~nan, score, 0.0)
-        order = np.lexsort(
-            (tie, -s if desc else s, (nan != desc) & ok, ~ok, group)
-        )
+        nan = np.isnan(score)
+        s = np.where(nan, 0.0, score)
+        order = np.lexsort((tie, -s if desc else s, nan != desc, group))
         g = group[order]
         first = np.r_[True, g[1:] != g[:-1]]
         start = np.maximum.accumulate(np.where(first, np.arange(len(g)), 0))
         return order[np.arange(len(g)) - start < n]
 
     def pairs(chunk):
-        """(big row, small row, score, valid) of every scored pair, or
-        None when there is none."""
+        """(big row, small row, score) of every valid pair, or None when
+        no pair was scored."""
         if n <= 0:
             return None
         vb, lb, xb = _list_matrix(chunk.column(1))
@@ -270,8 +273,9 @@ def _nearest(
             sel = np.arange(len(vb)) if key is None else np.flatnonzero(bkey == k)
             if len(sel) and len(rows):
                 sc, ok = block(xb[sel], lb[sel], vb[sel], rows)
-                parts.append((np.repeat(sel, len(rows)), np.tile(rows, len(sel)),
-                              sc.ravel(), ok.ravel()))
+                ok = ok.ravel()
+                parts.append((np.repeat(sel, len(rows))[ok],
+                              np.tile(rows, len(sel))[ok], sc.ravel()[ok]))
         return [np.concatenate(p) for p in zip(*parts)] if parts else None
 
     def chunks(batches):
@@ -288,12 +292,11 @@ def _nearest(
         )
 
         def run(batches):
-            for chunk, (i, j, sc, ok) in chunks(batches):
-                keep = top(i, sc, ok, s_rank[j])
+            for chunk, (i, j, sc) in chunks(batches):
+                keep = top(i, sc, s_rank[j])
                 yield pa.RecordBatch.from_arrays(
                     chunk.take(pa.array(i[keep])).columns + [
-                        s_ids.take(pa.array(j[keep])),
-                        pa.array(sc[keep], mask=~ok[keep]),
+                        s_ids.take(pa.array(j[keep])), pa.array(sc[keep]),
                     ],
                     names=schema.names,
                 )
@@ -306,14 +309,13 @@ def _nearest(
 
     def run(batches):
         best = None  # running top-n: (small row, score, big ids)
-        for chunk, (i, j, sc, ok) in chunks(batches):
-            j, sc, ids = j[ok], sc[ok], chunk.column(0).take(pa.array(i[ok]))
+        for chunk, (i, j, sc) in chunks(batches):
+            ids = chunk.column(0).take(pa.array(i))
             if best is not None:
                 j, sc = np.concatenate([best[0], j]), np.concatenate([best[1], sc])
                 ids = pa.concat_arrays([best[2], ids])
             if len(j):
-                keep = top(s_rank[j], sc, np.ones(len(j), bool),
-                           ids.to_numpy(zero_copy_only=False))
+                keep = top(s_rank[j], sc, ids.to_numpy(zero_copy_only=False))
                 best = j[keep], sc[keep], ids.take(pa.array(keep))
         if best is not None:
             yield pa.RecordBatch.from_arrays(
@@ -530,51 +532,142 @@ def _q_cos_score(dot_col: Column, n2a: Column, n2b: Column) -> Column:
     return dot_col.cast("double") / F.sqrt(n2a.cast("double") * n2b.cast("double"))
 
 
-def _sig_frame(
-    src: DataFrame,
+def _srp_keys(
+    df: DataFrame,
     id_col: str,
     vec_col: str,
     bands: int,
     planes_per_band: int,
     dim: int,
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """(id, *extra_cols, _q, _n2, _keys) — per vector: its quantized
-    int64 form, exact squared norm, and `bands` int64 band keys (bit p
-    = sign of the quantized dot with the band's plane p) — computed in
-    ONE Arrow-batched numpy pass over the source and persisted ONCE.
+) -> tuple[DataFrame, DataFrame]:
+    """THE SRP key builder every signature-family operator, index and
+    gate composes: ``(keys, vecs)`` with vecs = (id, _q, _n2), the
+    vector's SIG_SCALE-quantized int64 form and exact squared norm for
+    the verify tail, and keys = (id, _q, _n2, _band, _key), one row per
+    band per vector — both from ONE `_make_sig_udf` pass over ``df``.
+    Key rows carry the vector so a new side's candidates keep it (a
+    stream cannot look its own rows up again without a stateful
+    stream-stream join); joins that do not read it never shuffle it.
 
-    Callers explode `_keys` AFTER the cache, so the candidate bucket
-    join still shuffles only (id, band-index, int64 key) — fixed-width
-    keys, never the vector payload. Integer band keys beat the old
-    sign-pattern strings as shuffle keys too (8 bytes vs 16-char
-    UTF8).
+    The evaluate-once barrier follows the input, as in
+    `dedup.minhash_band_keys`: a batch frame is tracked-persisted (it
+    feeds the keys AND the verify; unpersisted, Catalyst pushes
+    join-key predicates below the kernel and DUPLICATES its
+    ArrowEvalPython node); a streaming frame cannot persist, so its
+    kernel is marked nondeterministic, which pins the same placement
+    (the kernel is in fact deterministic; results are unchanged).
+    NULL / ragged / non-finite vectors get NULL fields and no keys, so
+    they never become candidates.
 
-    All signature math is exact int64 (see SIG_SCALE), so results are
-    bit-identical to the DuckDB oracle REGARDLESS of summation order —
-    which is what lets this be a numpy matmul instead of the previous
-    interpreted left-to-right lambda folds (those are CodegenFallback
-    in Spark and dominated every signature query's wall time).
-
-    Persist lifecycle: scoped to the returned plan; callers that run
-    many operators in one session reclaim it with
-    ``spark.catalog.clearCache()`` (the bench does this per query).
+    Keys explode AFTER the cache: candidate joins shuffle fixed-width
+    (id, band, int64 key) rows, never vectors. All signature math is
+    exact int64 (see SIG_SCALE), bit-identical to the DuckDB oracles
+    in any summation order.
     """
     sig = _make_sig_udf(bands, planes_per_band, dim)
-    return (
-        src.select(
-            F.col(id_col),
-            *[F.col(c) for c in extra_cols],
-            sig(F.col(vec_col)).alias("_s"),
+    if df.isStreaming:
+        sig = sig.asNondeterministic()
+    base = df.select(F.col(id_col), sig(F.col(vec_col)).alias("_s")).select(
+        F.col(id_col),
+        F.col("_s.q").alias("_q"),
+        F.col("_s.n2").alias("_n2"),
+        F.col("_s.keys").alias("_keys"),
+    )
+    if not df.isStreaming:
+        base = tracked_persist(base)
+    keys = base.select(
+        F.col(id_col), "_q", "_n2", F.posexplode("_keys").alias("_band", "_key")
+    )
+    return keys, base.select(id_col, "_q", "_n2")
+
+
+def _srp_verified(
+    cand: DataFrame,
+    a: str,
+    b: str,
+    vecs_a: DataFrame | None,
+    vecs_b: DataFrame | None,
+) -> DataFrame:
+    """THE SRP verify tail and the one caller of `_dotq`: candidate rows
+    (id columns ``a``, ``b``) with ``_dot``, the exact int64 dot of the
+    two quantized vectors, and ``_na``/``_nb``, their exact squared
+    norms. Pair callers keep `_q_cos_ge` rows; `lsh_topk` ranks by
+    `_q_cos_score`.
+
+    ``vecs_a``/``vecs_b`` are (id, _q, _n2) frames to look each side's
+    vector up in by id, or None where that side's ``_q?``/``_n?``
+    already ride on the candidate rows. A caller that broadcasts
+    ``cand`` keeps the looked-up side from exchanging."""
+    for side, col, vecs in (("a", a, vecs_a), ("b", b, vecs_b)):
+        if vecs is not None:
+            cand = vecs.select(
+                F.col(vecs.columns[0]).alias(f"_i{side}"),
+                F.col("_q").alias(f"_q{side}"),
+                F.col("_n2").alias(f"_n{side}"),
+            ).join(cand, F.col(col) == F.col(f"_i{side}"))
+    return cand.withColumn("_dot", _dotq(F.col("_qa"), F.col("_qb"))).drop(
+        "_ia", "_ib", "_qa", "_qb"
+    )
+
+
+def _srp_self_pairs(keys: DataFrame, vecs: DataFrame) -> DataFrame:
+    """(id_a, id_b, _dot, _na, _nb) with id_a < id_b: the self-pair
+    core — (band, key) self-equi-join, distinct candidates, verify
+    tail. ``keys``/``vecs`` are :func:`_srp_keys` frames."""
+    id_col = keys.columns[0]
+    left = keys.select(
+        F.col("_band").alias("_lb"), F.col("_key").alias("_lk"),
+        F.col(id_col).alias("id_a"),
+    )
+    right = keys.select(
+        F.col("_band").alias("_rb"), F.col("_key").alias("_rk"),
+        F.col(id_col).alias("id_b"),
+    )
+    cand = (
+        left.join(
+            right,
+            (left["_lb"] == right["_rb"]) & (left["_lk"] == right["_rk"])
+            & (left["id_a"] < right["id_b"]),
         )
-        .select(
-            F.col(id_col),
-            *extra_cols,
-            F.col("_s.q").alias("_q"),
-            F.col("_s.n2").alias("_n2"),
-            F.col("_s.keys").alias("_keys"),
+        .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    return _srp_verified(cand, "id_a", "id_b", vecs, vecs)
+
+
+def _srp_cross_pairs(
+    keys_new: DataFrame, keys_corpus: DataFrame, vecs_corpus: DataFrame, per_band: bool
+) -> DataFrame:
+    """(id_new, id_corpus, _dot, _na, _nb): the cross-pair core — new-
+    side band keys (with their vectors) equi-joined to corpus-side keys
+    on (band, key), verify tail. Each frame leads with its id column.
+    The new side is the bounded one (an ingest batch, whose candidates
+    are its near-duplicates): its keys and then the candidates are
+    broadcast, so the corpus side never exchanges. Batch contract: id_new != id_corpus, one row per
+    pair. ``per_band=True`` is the stream contract: one row per
+    colliding band and no id filter (a stream cannot drop duplicates
+    globally; callers dedupe per microbatch)."""
+    kn = keys_new.select(
+        "_band", "_key", F.col(keys_new.columns[0]).alias("id_new"),
+        F.col("_q").alias("_qa"), F.col("_n2").alias("_na"),
+    )
+    kc = keys_corpus.select(
+        "_band", "_key", F.col(keys_corpus.columns[0]).alias("id_corpus")
+    )
+    cand = kc.join(F.broadcast(kn), ["_band", "_key"]).select(
+        "id_new", "id_corpus", "_qa", "_na"
+    )
+    if not per_band:
+        cand = cand.filter(F.col("id_new") != F.col("id_corpus")).dropDuplicates(
+            ["id_new", "id_corpus"]
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    return _srp_verified(F.broadcast(cand), "id_new", "id_corpus", None, vecs_corpus)
+
+
+def _q_cos_kept(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Verify-tail rows whose quantized cosine clears ``threshold``."""
+    return pairs.filter(
+        _q_cos_ge(F.col("_dot"), F.col("_na"), F.col("_nb"), threshold)
     )
 
 
@@ -602,53 +695,14 @@ def embedding_near_dup_pairs(
 
     Output: (id_a, id_b) int pairs with id_a < id_b, hash-stable.
     """
-    # Bucket self-join carries IDS ONLY (the candidate shuffle is two
-    # ints per row, not two embedding payloads); quantized vectors
-    # re-attach for verification from the same persisted frame (_keys
-    # exploded after the cache).
     # _spread: the Arrow signature kernel is the hot compute; an
     # under-split corpus (one parquet file = one task) would run it
     # on a single core.
-    src = _spread(corpus.select(F.col(id_col), F.col(vec_col)))
-    base = _sig_frame(src, id_col, vec_col, bands, planes_per_band, dim)
-    keyed = base.select(
-        F.col(id_col), F.posexplode("_keys").alias("_band", "_key")
+    keys, vecs = _srp_keys(
+        _spread(corpus.select(F.col(id_col), F.col(vec_col))),
+        id_col, vec_col, bands, planes_per_band, dim,
     )
-    a = keyed.select(
-        F.col("_band").alias("_ba"), F.col("_key").alias("_ka"),
-        F.col(id_col).alias("id_a"),
-    )
-    b = keyed.select(
-        F.col("_band").alias("_bb"), F.col("_key").alias("_kb"),
-        F.col(id_col).alias("id_b"),
-    )
-    cand = (
-        a.join(
-            b,
-            (a["_ba"] == b["_bb"]) & (a["_ka"] == b["_kb"]) & (a["id_a"] < b["id_b"]),
-        )
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    v_a = base.select(
-        F.col(id_col).alias("_ia"), F.col("_q").alias("_qa"), F.col("_n2").alias("_na")
-    )
-    v_b = base.select(
-        F.col(id_col).alias("_ib"), F.col("_q").alias("_qb"), F.col("_n2").alias("_nb")
-    )
-    return (
-        cand.join(v_a, F.col("id_a") == F.col("_ia"))
-        .join(v_b, F.col("id_b") == F.col("_ib"))
-        .filter(
-            _q_cos_ge(
-                _dotq(F.col("_qa"), F.col("_qb")),
-                F.col("_na"),
-                F.col("_nb"),
-                threshold,
-            )
-        )
-        .select("id_a", "id_b")
-    )
+    return _q_cos_kept(_srp_self_pairs(keys, vecs), threshold).select("id_a", "id_b")
 
 
 def embedding_near_dup_against(
@@ -668,71 +722,25 @@ def embedding_near_dup_against(
     side is small). No corpus self-pairs, no new self-pairs.
 
     Same blocking machinery as embedding_near_dup_pairs (md5-derived
-    hyperplanes, int64 band keys, ids-only candidate shuffle) but the
-    bucket join is new-side x corpus-side only. Signatures for BOTH
-    sides are computed over the TAGGED UNION in one fused Arrow pass
-    (one generated plan, one persist); a production pipeline instead
-    persists the corpus's signature frame as an index and computes
-    only the new side per batch — the join shape (equi-join on
-    (band, key)) is identical.
+    hyperplanes, int64 band keys, ids-only candidate shuffle) through
+    the cross-pair core: the new batch is broadcast, so the corpus
+    side never exchanges. Both sides are keyed here; a production
+    pipeline persists the corpus's keys as an index and keys only the
+    new side per batch (``streaming.vector_dedup``, the same core).
 
     Output: (id_new, id_corpus) int pairs, hash-stable.
     """
-    tagged = _spread(
-        new.select(F.col(id_col), F.col(vec_col), F.lit("n").alias("_side")).unionByName(
-            corpus.select(F.col(id_col), F.col(vec_col), F.lit("c").alias("_side"))
-        )
+    kn, _ = _srp_keys(
+        new.select(F.col(id_col), F.col(vec_col)),
+        id_col, vec_col, bands, planes_per_band, dim,
     )
-    base = _sig_frame(
-        tagged, id_col, vec_col, bands, planes_per_band, dim, extra_cols=("_side",)
+    kc, vc = _srp_keys(
+        _spread(corpus.select(F.col(id_col), F.col(vec_col))),
+        id_col, vec_col, bands, planes_per_band, dim,
     )
-    keyed = base.select(
-        F.col(id_col), F.col("_side"), F.posexplode("_keys").alias("_band", "_key")
-    )
-    # The ingest premise — a bounded new batch against an unbounded
-    # corpus — makes every new-side frame legitimately broadcastable:
-    # with explicit hints, the corpus side NEVER exchanges (its band
-    # keys stream through a broadcast-hash join; its unit vectors
-    # stream through the final verify join). The only shuffle left is
-    # the candidate-id dropDuplicates — skinny int pairs.
-    left = keyed.filter(F.col("_side") == "n").select(
-        F.col("_band").alias("_lb"), F.col("_key").alias("_lk"),
-        F.col(id_col).alias("id_new"),
-    )
-    right = keyed.filter(F.col("_side") == "c").select(
-        F.col("_band").alias("_rb"), F.col("_key").alias("_rk"),
-        F.col(id_col).alias("id_corpus"),
-    )
-    cand = (
-        right.join(
-            F.broadcast(left),
-            (left["_lb"] == right["_rb"]) & (left["_lk"] == right["_rk"])
-            & (left["id_new"] != right["id_corpus"]),
-        )
-        .select("id_new", "id_corpus")
-        .dropDuplicates(["id_new", "id_corpus"])
-    )
-    v_n = base.filter(F.col("_side") == "n").select(
-        F.col(id_col).alias("_ia"), F.col("_q").alias("_qa"), F.col("_n2").alias("_na")
-    )
-    v_c = base.filter(F.col("_side") == "c").select(
-        F.col(id_col).alias("_ib"), F.col("_q").alias("_qb"), F.col("_n2").alias("_nb")
-    )
-    # candidates (with the new-side vector attached) are new-batch-
-    # bounded too -> broadcast them INTO the corpus signature side.
-    cand_n = cand.join(F.broadcast(v_n), F.col("id_new") == F.col("_ia"))
-    return (
-        v_c.join(F.broadcast(cand_n), F.col("id_corpus") == F.col("_ib"))
-        .filter(
-            _q_cos_ge(
-                _dotq(F.col("_qa"), F.col("_qb")),
-                F.col("_na"),
-                F.col("_nb"),
-                threshold,
-            )
-        )
-        .select("id_new", "id_corpus")
-    )
+    return _q_cos_kept(
+        _srp_cross_pairs(kn, kc, vc, per_band=False), threshold
+    ).select("id_new", "id_corpus")
 
 
 def semantic_dedup_pairs(
@@ -757,7 +765,7 @@ def semantic_dedup_pairs(
     n_cells corpus vectors with the smallest md5(id), unit-normalized;
     max-cosine assignment with left-fold double dots) — reproducible
     in any engine with no RNG state. The verify is the signature
-    family's exact-int64 quantized cosine.
+    family's exact-int64 quantized cosine (`_srp_verified`).
 
     Scale shape: centroids broadcast (no corpus shuffle to assign);
     the pair join is an equi-join on cell_id carrying the quantized
@@ -770,42 +778,30 @@ def semantic_dedup_pairs(
     hash-stable.
     """
     cents = _ivf_centroids(corpus, n_cells, 0, id_col, vec_col)
-    assigned = _nearest(
+    # the key builder's id is the (cell_id, id) pair: its one persisted
+    # signature pass then carries the cell, and both sides of the
+    # cell self-join read their vectors from it (keys are unused, so
+    # the cheapest kernel config)
+    cells = _nearest(
         corpus.select(F.col(id_col), F.col(vec_col)), cents, "dot", 1, "big"
-    ).select(F.col(id_col), "cell_id", F.col(vec_col))
-    # quantized form for the verify; bands/planes are irrelevant here
-    # (only q and n2 are consumed), so the cheapest kernel config.
-    sig = _make_sig_udf(1, 1, dim)
-    base = (
-        assigned.select(F.col(id_col), "cell_id", sig(F.col(vec_col)).alias("_s"))
-        .select(
-            F.col(id_col),
-            "cell_id",
-            F.col("_s.q").alias("_q"),
-            F.col("_s.n2").alias("_n2"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    ).select(F.struct("cell_id", id_col).alias("_cid"), F.col(vec_col))
+    _, vecs = _srp_keys(cells, "_cid", vec_col, 1, 1, dim)
+    a = vecs.select(
+        F.col("_cid").alias("_ca"), F.col("_q").alias("_qa"), F.col("_n2").alias("_na")
     )
-    a = base.select(
-        F.col("cell_id").alias("_ca"), F.col(id_col).alias("id_a"),
-        F.col("_q").alias("_qa"), F.col("_n2").alias("_na"),
+    b = vecs.select(
+        F.col("_cid").alias("_cb"), F.col("_q").alias("_qb"), F.col("_n2").alias("_nb")
     )
-    b = base.select(
-        F.col("cell_id").alias("_cb"), F.col(id_col).alias("id_b"),
-        F.col("_q").alias("_qb"), F.col("_n2").alias("_nb"),
+    cand = a.join(
+        b,
+        (a["_ca.cell_id"] == b["_cb.cell_id"]) & (a["_ca"][id_col] < b["_cb"][id_col]),
+    ).select(
+        a["_ca"][id_col].alias("id_a"), b["_cb"][id_col].alias("id_b"),
+        a["_ca.cell_id"].alias("cell_id"), "_qa", "_na", "_qb", "_nb",
     )
-    return (
-        a.join(b, (a["_ca"] == b["_cb"]) & (a["id_a"] < b["id_b"]))
-        .filter(
-            _q_cos_ge(
-                _dotq(F.col("_qa"), F.col("_qb")),
-                F.col("_na"),
-                F.col("_nb"),
-                threshold,
-            )
-        )
-        .select("id_a", "id_b", F.col("_ca").alias("cell_id"))
-    )
+    return _q_cos_kept(
+        _srp_verified(cand, "id_a", "id_b", None, None), threshold
+    ).select("id_a", "id_b", "cell_id")
 
 
 #: Centroid components are quantized to 1e-6 before averaging so the
@@ -941,7 +937,8 @@ def _ivf_centroids(
 ) -> DataFrame:
     """(cell_id, _ucv) unit centroids — the build phase shared by
     ivf_topk and ivf_build_index; arithmetic contract documented on
-    ivf_topk."""
+    ivf_topk. A corpus vector no centroid can score (NULL, ragged,
+    non-finite) joins no Lloyd cell, so it never enters a mean."""
     cents = (
         _md5_sample(corpus, n_cells, id_col, vec_col, "cell_id")
         .withColumn("_nrm", l2_norm(F.col("_cv")))
@@ -951,8 +948,8 @@ def _ivf_centroids(
             # zero-norm (or NULL) vector must yield a NULL centroid,
             # not an ANSI 0/0 job abort (r14 battery find — the
             # initial sample lacked the _mnrm > 0 guard the refine
-            # loop has). NULL centroids score NULL against everything
-            # and `_nearest` ranks NULL scores last, so degenerate cells
+            # loop has). NULL centroids score against nothing and
+            # `_nearest` drops unscorable pairs, so degenerate cells
             # are never probed or assigned; on clean corpora the WHEN
             # always takes the same branch — values bit-identical.
             F.when(
@@ -1051,66 +1048,44 @@ def lsh_topk(
 
     Ranking uses the QUANTIZED cosine (differs from the true cosine by
     ~1e-6; brute_force_topk remains the exact-float baseline).
+
+    Shape: one band of ``n_planes`` planes; the queries' keys are
+    broadcast into the corpus keys, both carrying their vectors, then
+    the SRP verify tail scores. Candidates grow with the corpus (every
+    query meets its whole bucket), so they are never collected or
+    broadcast — unlike the ingest-bounded cross-pair core. Zero-norm
+    vectors are no neighbours (their cosine is 0/0).
     """
-    # Signatures go through the PERSISTED _sig_frame on both sides.
-    # Beyond the scan dedup, the cache is a predicate-pushdown
-    # BARRIER, and that matters for Python UDF plans: without it,
-    # Catalyst pushes the n2 > 0 filter (and the inferred
-    # isnotnull(join key)) below the signature projection and
-    # DUPLICATES the ArrowEvalPython node — the kernel then runs
-    # TWICE per side (observed in the executed plan; ~2x the
-    # signature cost). The persisted frame evaluates the kernel once;
-    # filters apply to the cached rows. At production scale the
-    # corpus signature frame is a precomputed index table anyway.
-    base_c = _sig_frame(
-        _spread(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-            )
-        ),
-        "neighbor_id",
-        "_cv",
-        1,
-        n_planes,
-        dim,
+    kc, _ = _srp_keys(
+        _spread(corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))),
+        "neighbor_id", vec_col, 1, n_planes, dim,
     )
-    c = base_c.filter(F.col("_n2") > 0).select(
-        "neighbor_id",
-        F.col("_q").alias("_qc"),
-        F.col("_n2").alias("_nc"),
-        F.element_at("_keys", 1).alias("_bucket"),
+    kq, _ = _srp_keys(
+        queries.select(F.col(query_id_col), F.col(vec_col)),
+        query_id_col, vec_col, 1, n_planes, dim,
     )
-    base_q = _sig_frame(
-        queries.select(F.col(query_id_col), F.col(vec_col).alias("_qv")),
-        query_id_col,
-        "_qv",
-        1,
-        n_planes,
-        dim,
+    cand = kc.select(
+        "_key", "neighbor_id", F.col("_q").alias("_qb"), F.col("_n2").alias("_nb")
+    ).join(
+        F.broadcast(kq.select(
+            "_key", query_id_col, F.col("_q").alias("_qa"), F.col("_n2").alias("_na")
+        )),
+        "_key",
     )
-    q = base_q.filter(F.col("_n2") > 0).select(
-        query_id_col,
-        F.col("_q").alias("_qq"),
-        F.col("_n2").alias("_nq"),
-        F.element_at("_keys", 1).alias("_bucket"),
-    )
-    scored = c.join(F.broadcast(q), "_bucket").select(
-        query_id_col,
-        "neighbor_id",
-        _q_cos_score(
-            _dotq(F.col("_qq"), F.col("_qc")), F.col("_nq"), F.col("_nc")
-        ).alias("_score"),
+    scored = (
+        _srp_verified(cand, query_id_col, "neighbor_id", None, None)
+        .filter((F.col("_na") > 0) & (F.col("_nb") > 0))
+        .select(
+            query_id_col,
+            "neighbor_id",
+            _q_cos_score(F.col("_dot"), F.col("_na"), F.col("_nb")).alias("_score"),
+        )
     )
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("_score").desc(), F.col("neighbor_id").asc()
     )
     return (
-        # NULL scores (rows whose embedding is NULL / ragged /
-        # non-finite — the kernels mask them, r13 boundary battery)
-        # are not neighbors: drop BEFORE ranking, or they'd fill
-        # trailing ranks whenever k exceeds the valid candidates
-        scored.filter(F.col("_score").isNotNull())
-        .withColumn("rk", F.row_number().over(w))
+        scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select(query_id_col, "neighbor_id", "rk")
     )
@@ -1240,9 +1215,10 @@ def assign_nearest_centroid(
 
     Scale shape: the centroid table is |labels| rows, the small side of
     `_nearest`; the argmin is taken where each vector is scored, so
-    the corpus never shuffles and each vector emits one row. A label
-    whose centroid cannot be scored against a vector (ragged, NULL or
-    non-finite) ranks after every label that can.
+    the corpus never shuffles and each vector emits at most one row.
+    A label whose centroid cannot be scored against a vector (ragged,
+    NULL or non-finite) is no candidate for it, and a vector no
+    centroid can score (a NULL embedding) gets no row.
 
     Output: (vec_id, nearest_label) — ints only, hash-stable.
     """
@@ -2444,7 +2420,9 @@ def bitext_margin_pairs(
 
     All arithmetic after the Arrow cosine kernel is exact int64:
     cosines quantize to ppm, neighborhood averages are SQL integral
-    division over exactly the k kept rows, and the margin is
+    division over exactly the (at most k) kept scorable rows — a pair
+    with a NULL, ragged or zero-norm vector is no neighbour — and the
+    margin is
     (2e6 * cos_q) DIV (a_q + b_q). Pairs whose denominators are not
     positive are dropped (a neighborhood anti-correlated with the
     other corpus carries no alignment evidence).
@@ -2484,18 +2462,20 @@ def bitext_margin_pairs(
         .cast("long")
         .alias("cos_ppm"),
     )
+    # unscorable pairs (NULL cos_ppm: NULL, ragged, zero-norm vectors)
+    # are no neighbours: they rank last and are dropped with the rank
+    # cut, so each average covers scorable pairs only. (A filter
+    # before the window would be pushed below the projection and run
+    # the Arrow kernel twice.)
     wf = Window.partitionBy("src_id").orderBy(
-        F.col("cos_ppm").desc(), F.col("tgt_id").asc()
+        F.col("cos_ppm").desc_nulls_last(), F.col("tgt_id").asc()
     )
     wb = Window.partitionBy("tgt_id").orderBy(
-        F.col("cos_ppm").desc(), F.col("src_id").asc()
+        F.col("cos_ppm").desc_nulls_last(), F.col("src_id").asc()
     )
-    fwd = scored.withColumn("_rk", F.row_number().over(wf)).filter(
-        F.col("_rk") <= k
-    )
-    bwd = scored.withColumn("_rk", F.row_number().over(wb)).filter(
-        F.col("_rk") <= k
-    )
+    kept = (F.col("_rk") <= k) & F.col("cos_ppm").isNotNull()
+    fwd = scored.withColumn("_rk", F.row_number().over(wf)).filter(kept)
+    bwd = scored.withColumn("_rk", F.row_number().over(wb)).filter(kept)
     a = fwd.groupBy("src_id").agg(
         F.expr("sum(cos_ppm) DIV count(1)").alias("_a")
     )

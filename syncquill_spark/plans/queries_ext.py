@@ -2537,7 +2537,7 @@ SELECT vec_id, label AS nearest_label FROM (
   SELECT vec_id, label,
          ROW_NUMBER() OVER (PARTITION BY vec_id
                             ORDER BY d2 ASC, label ASC) AS rn
-  FROM scored) t
+  FROM scored WHERE d2 IS NOT NULL) t
 WHERE rn = 1
 """
 

@@ -15,12 +15,12 @@ every column.
 
 from __future__ import annotations
 
-import os
 import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from syncquill_spark.sources._atomic import atomic_replace_dir
 from syncquill_spark.sources.base import Table
 
 
@@ -37,10 +37,14 @@ class _SwappedFileTable(Table):
 
     def overwrite(self, df: DataFrame) -> None:
         staging = f"{self.path}.__staging_{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").options(**self.write_options).format(self.fmt).save(staging)
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path) if os.path.isdir(self.path) else os.remove(self.path)
-        os.rename(staging, self.path)
+        try:
+            df.write.mode("overwrite").options(**self.write_options).format(
+                self.fmt
+            ).save(staging)
+            atomic_replace_dir(staging, self.path)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
 
     def append(self, df: DataFrame) -> None:
         df.write.mode("append").options(**self.write_options).format(self.fmt).save(self.path)

@@ -4,12 +4,19 @@ operators/similarity.embedding_near_dup_against (same quantized-int64
 band keys, same exact-integer verify), for pipelines that gate
 documents at ingest instead of in nightly batches.
 
+Both the index build and the gate compose the SRP core in
+operators/similarity.py, as the batch operators do: the key builder
+`_srp_keys` (one signature pass → band keys + quantized vectors), the
+cross-pair core `_srp_cross_pairs` in its stream contract, and its
+exact-integer verify tail.
+
 Scale shape: the corpus index is built ONCE (one signature pass,
 persisted / written to a table); each microbatch computes signatures
 only for its own rows, equi-joins the index on (band, key) — a
-stream-static join, no state store for candidate generation — and
-verifies candidates with the exact integer dot. The stream never sees
-the O(|stream| x |corpus|) pair space.
+stream-static join, no state store: the batch's vectors ride on its
+key rows — and verifies candidates with the exact integer dot against
+the indexed vectors. The stream never sees the O(|stream| x |corpus|)
+pair space.
 
 Reference shape: /root/reference/syncquill.py has no streaming (the
 whole reference is a batch sync script); this is EXT-tier capability
@@ -21,12 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from syncquill_spark.operators._cache import tracked_persist
 from syncquill_spark.operators.similarity import (
-    _make_sig_udf,
-    _dotq,
-    _q_cos_ge,
-    _sig_frame,
+    _q_cos_kept,
+    _srp_cross_pairs,
+    _srp_keys,
 )
 
 # Fixed width of the stored-keys hash-bucket space — a FORMAT constant,
@@ -55,8 +60,9 @@ def build_embedding_index(
 ) -> tuple[DataFrame, DataFrame]:
     """One-time corpus signature index for streaming dedup:
     (keys, vecs) where keys = (corpus_id, band, key, bucket) for the
-    band join and vecs = (corpus_id, q, n2) for the verify. Both derive
-    from ONE persisted signature pass (_sig_frame).
+    band join and vecs = (corpus_id, q, n2) for the verify: the SRP
+    key builder's two frames (`similarity._srp_keys`, one persisted
+    signature pass) under the index's column names.
 
     ``_bucket`` = xxhash64(band, key) mod 4096 exists so the keys part
     can be PERSISTED Hive-partitioned on it (``save_embedding_index``):
@@ -66,12 +72,11 @@ def build_embedding_index(
     serve-I/O-scales-with-the-query discipline as the BM25 term-bucket
     and IVF-PQ cell layouts. In memory the column is ~free (one hash
     per key row)."""
-    base = _sig_frame(corpus, id_col, vec_col, bands, planes_per_band, dim)
-    keys = base.select(
-        F.col(id_col).alias("corpus_id"),
-        F.posexplode("_keys").alias("_band", "_key"),
+    keys, vecs = _srp_keys(corpus, id_col, vec_col, bands, planes_per_band, dim)
+    keys = keys.select(
+        F.col(id_col).alias("corpus_id"), "_band", "_key"
     ).withColumn("_bucket", _bucket_expr(F.col("_band"), F.col("_key")))
-    vecs = base.select(
+    vecs = vecs.select(
         F.col(id_col).alias("corpus_id"),
         F.col("_q").alias("_qc"),
         F.col("_n2").alias("_nc"),
@@ -158,12 +163,12 @@ def stream_embedding_near_dups(
     collide with the corpus index and whose exact quantized cosine
     clears the threshold.
 
-    The signature kernel is marked nondeterministic ON THE STREAM SIDE
-    only: Catalyst may not then duplicate the ArrowEvalPython node to
-    satisfy pushed-down join-key predicates (the batch operators use a
-    persist as that barrier — a streaming frame cannot be persisted).
-    The kernel is in fact deterministic, so results are unchanged; the
-    marking only pins evaluate-once placement.
+    The stream side is keyed by the SRP key builder's streaming form
+    (kernel marked nondeterministic — a streaming frame cannot persist;
+    a materialized micro-batch is persisted instead) and matched by the
+    cross-pair core's stream contract (`similarity._srp_cross_pairs`,
+    ``per_band=True``) — the same core `embedding_near_dup_against`
+    runs in batch.
 
     Matches are per-band candidates verified once each; a pair that
     collides in several bands emits once per colliding band within the
@@ -185,60 +190,34 @@ def stream_embedding_near_dups(
     join is unchanged (same rows either way — equal (band, key)
     implies equal bucket, so the filter never removes a match).
 
-    CALLER CONTRACT (pruned path): the one signature pass is held via
-    ``tracked_persist`` so the bucket collection and the join share
-    it; the returned plan still reads that cache, so it cannot be
-    unpersisted here. After the consuming action (the foreachBatch
-    write, a test's collect, a ladder run's count), call
+    CALLER CONTRACT (materialized batch): the one signature pass is
+    held via ``tracked_persist`` so the bucket collection and the join
+    share it; the returned plan still reads that cache, so
+    it cannot be unpersisted here. After the consuming action (the
+    foreachBatch write, a test's collect, a ladder run's count), call
     ``operators._cache.release_cached_intermediates()`` — once per
     micro-batch in a long-lived gate. Skipping it leaks one
     batch-sized cached frame per invocation until executor storage
-    evicts under pressure (ADVICE r15; the contract previously lived
-    only in an inline comment).
+    evicts under pressure (ADVICE r15).
     """
-    sig = _make_sig_udf(bands, planes_per_band, dim).asNondeterministic()
-    s = (
-        stream.select(
-            F.col(id_col).alias("stream_id"), sig(F.col(vec_col)).alias("_s")
-        )
-        .select(
-            "stream_id",
-            F.col("_s.q").alias("_qs"),
-            F.col("_s.n2").alias("_ns"),
-            F.posexplode("_s.keys").alias("_band", "_key"),
-        )
-    )
-    if "_bucket" in index_keys.columns and not s.isStreaming:
-        # one signature pass feeds both the bucket collection and the
-        # join (the persist is also the evaluate-once barrier the
-        # nondeterministic marking provides on the streaming path).
-        # tracked_persist, not a bare persist: a foreachBatch gate
-        # calls this per micro-batch forever, and the batch driver
-        # reclaims these via release_cached_intermediates() instead
-        # of letting batch-sized caches accumulate (ADVICE r09
-        # pattern, same as the nightly merge_*_index loops).
-        s = tracked_persist(s)
+    keys, _ = _srp_keys(stream, id_col, vec_col, bands, planes_per_band, dim)
+    if "_bucket" in index_keys.columns and not stream.isStreaming:
         touched = [
             r["_b"]
-            for r in s.select(
+            for r in keys.select(
                 _bucket_expr(F.col("_band"), F.col("_key")).alias("_b")
             )
             .distinct()
             .collect()
         ]
         index_keys = index_keys.filter(F.col("_bucket").isin(touched))
-    cand = s.join(
-        index_keys.select("corpus_id", "_band", "_key"), ["_band", "_key"]
-    ).select("stream_id", "corpus_id", "_qs", "_ns")
-    return (
-        cand.join(index_vecs, "corpus_id")
-        .filter(
-            _q_cos_ge(
-                _dotq(F.col("_qs"), F.col("_qc")),
-                F.col("_ns"),
-                F.col("_nc"),
-                threshold,
-            )
-        )
-        .select("stream_id", "corpus_id")
+    corpus_vecs = index_vecs.select(
+        "corpus_id", F.col("_qc").alias("_q"), F.col("_nc").alias("_n2")
     )
+    return _q_cos_kept(
+        _srp_cross_pairs(
+            keys, index_keys.select("corpus_id", "_band", "_key"), corpus_vecs,
+            per_band=True,
+        ),
+        threshold,
+    ).select(F.col("id_new").alias("stream_id"), F.col("id_corpus").alias("corpus_id"))

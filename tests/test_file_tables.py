@@ -101,3 +101,24 @@ def test_orc_table_roundtrip_and_sync(spark, tmp_path):
     # atomic overwrite replaces content
     src.overwrite(spark.createDataFrame([(9, "z", 0.0)], df.schema))
     assert [r.id for r in src.read(spark).collect()] == [9]
+
+
+def test_file_table_failed_swap_keeps_old_table(spark, tmp_path, monkeypatch):
+    """CSV/JSON/ORC overwrites swap the staged write in with the atomic
+    exchange: when the swap raises, the old table still reads back and
+    no staging directory is left beside it."""
+    import pytest
+
+    from syncquill_spark.sources import OrcTable, _atomic
+
+    t = OrcTable(str(tmp_path / "t.orc"))
+    t.overwrite(spark.range(5).withColumnRenamed("id", "slno"))
+
+    def failed_swap(a, b):
+        raise OSError("swap failed")
+
+    monkeypatch.setattr(_atomic, "_exchange", failed_swap)
+    with pytest.raises(OSError, match="swap failed"):
+        t.overwrite(spark.range(100, 103).withColumnRenamed("id", "slno"))
+    assert sorted(r.slno for r in t.read(spark).collect()) == [0, 1, 2, 3, 4]
+    assert [p.name for p in tmp_path.iterdir()] == ["t.orc"]

@@ -109,6 +109,7 @@ def test_signature_kernel_evaluates_once_per_side(spark):
     import numpy as np
 
     from syncquill_spark.operators.similarity import (
+        embedding_near_dup_against,
         embedding_near_dup_pairs,
         lsh_topk,
     )
@@ -127,6 +128,10 @@ def test_signature_kernel_evaluates_once_per_side(spark):
     )
     # two signature frames (corpus + queries), each evaluated once
     plan = _plan(lsh_topk(df, queries, k=3))
+    assert plan.count("sig(") == 2, f"duplicated signature eval:\n{plan[:3000]}"
+    # two signature frames (new + corpus), each evaluated once
+    new = df.filter(F.col("vec_id") % 10 == 0)
+    plan = _plan(embedding_near_dup_against(new, df, threshold=0.9))
     assert plan.count("sig(") == 2, f"duplicated signature eval:\n{plan[:3000]}"
 
 

@@ -459,8 +459,8 @@ def test_arrow_fold_kernels_bit_identical_to_hof_folds(spark):
     EXACTLY (==, not approx) on random data — the order-preserving-fold
     guarantee that lets the kernels replace the HOF forms without
     touching any oracle. On NULL / ragged / NULL-element / NaN / +-inf
-    / zero-norm rows the core must mask (NULL score) exactly the pairs
-    the per-pair kernels mask; squared L2 masks what dot masks."""
+    / zero-norm rows the core must mask (emit no row) exactly the pairs
+    the per-pair kernels mask (NULL); squared L2 masks what dot masks."""
     import numpy as np
 
     from pyspark.sql import functions as F
@@ -522,10 +522,11 @@ def test_arrow_fold_kernels_bit_identical_to_hof_folds(spark):
         m: {r.i: r._score for r in _nearest(big, small, m, 1, "big", key="k").collect()}
         for m in ("dot", "cosine", "l2")
     }
+    # a masked pair emits no row: read it as None
     for i, r in out.items():
         for m, hof, kernel in (("dot", r.d1, r.d2), ("cosine", r.c1, r.c2),
                                ("l2", r.s1, r.d2)):
-            assert (core[m][i] is None) == (kernel is None), (m, i)
+            assert (core[m].get(i) is None) == (kernel is None), (m, i)
             if kernel is not None:
                 assert core[m][i] == hof, (m, i)
         if i < 100:
@@ -534,7 +535,7 @@ def test_arrow_fold_kernels_bit_identical_to_hof_folds(spark):
             assert list(r.u1) == list(r.u2)
     # every pathological pair is masked but the short equal-length one
     # (row 103), which is valid and scored against zero padding
-    masked = {i for i, v in core["cosine"].items() if v is None}
+    masked = {i for i in out if core["cosine"].get(i) is None}
     assert masked == set(range(100, 100 + len(patho))) - {103}, sorted(masked)
 
 
@@ -1242,7 +1243,8 @@ def _bitext_fixture(spark, n_src=10, n_noise=24, dim=8):
 
 def _mine_python_model(src, tgt, k, min_margin_ppm):
     """From-scratch margin mining with Spark's integral-division
-    semantics (DIV truncates toward zero)."""
+    semantics (DIV truncates toward zero). Pairs with a NULL or
+    zero-norm vector cannot be scored and are no neighbours."""
     import math
 
     def tdiv(a, b):
@@ -1250,32 +1252,37 @@ def _mine_python_model(src, tgt, k, min_margin_ppm):
         return q if (a >= 0) == (b >= 0) else -q
 
     def cos_ppm(a, b):
+        if a is None or b is None:
+            return None
         d = sum(x * y for x, y in zip(a, b))
         na = math.sqrt(sum(x * x for x in a))
         nb = math.sqrt(sum(y * y for y in b))
+        if na == 0 or nb == 0:
+            return None
         return math.floor(d / (na * nb) * 1_000_000 + 0.5)
 
     scores = {
-        (si, ti): cos_ppm(sv, tv)
+        (si, ti): c
         for si, sv in src.items()
         for ti, tv in tgt.items()
+        if (c := cos_ppm(sv, tv)) is not None
     }
     fwd = {
         si: sorted(
-            ((scores[(si, ti)], ti) for ti in tgt),
+            ((scores[(si, ti)], ti) for ti in tgt if (si, ti) in scores),
             key=lambda p: (-p[0], p[1]),
         )[:k]
         for si in src
     }
     bwd = {
         ti: sorted(
-            ((scores[(si, ti)], si) for si in src),
+            ((scores[(si, ti)], si) for si in src if (si, ti) in scores),
             key=lambda p: (-p[0], p[1]),
         )[:k]
         for ti in tgt
     }
-    a = {si: tdiv(sum(c for c, _ in nn), len(nn)) for si, nn in fwd.items()}
-    b = {ti: tdiv(sum(c for c, _ in nn), len(nn)) for ti, nn in bwd.items()}
+    a = {si: tdiv(sum(c for c, _ in nn), len(nn)) for si, nn in fwd.items() if nn}
+    b = {ti: tdiv(sum(c for c, _ in nn), len(nn)) for ti, nn in bwd.items() if nn}
     out = {}
     for si, nn in fwd.items():
         best = None
@@ -1294,7 +1301,11 @@ def _mine_python_model(src, tgt, k, min_margin_ppm):
 
 def test_bitext_margin_matches_python_model(spark):
     """Mined set identical to the from-scratch model — pairs, quantized
-    cosines, margins, tie-breaks, truncating division semantics."""
+    cosines, margins, tie-breaks, truncating division semantics. A
+    NULL-embedding and an all-zero target row are never neighbours, so
+    adding them changes no margin, even with k past the scorable
+    targets (they used to fill those windows, shrink every average and
+    inflate the margins)."""
     from syncquill_spark.operators.similarity import bitext_margin_pairs
 
     src_df, tgt_df, src, tgt = _bitext_fixture(spark)
@@ -1304,6 +1315,22 @@ def test_bitext_margin_matches_python_model(spark):
     }
     want = _mine_python_model(src, tgt, k=4, min_margin_ppm=1_000_000)
     assert got == want
+    padded = tgt_df.unionByName(spark.createDataFrame(
+        [(998, None), (999, [0.0] * 8)], "vec_id long, embedding array<double>"
+    ))
+    k_all = len(tgt) + 2
+
+    def mined(tgt_frame):
+        return {
+            r.src_id: (r.tgt_id, r.cos_ppm, r.margin_ppm)
+            for r in bitext_margin_pairs(src_df, tgt_frame, k=k_all).collect()
+        }
+
+    got_all = mined(tgt_df)
+    assert got_all and mined(padded) == got_all
+    assert _mine_python_model(
+        src, {**tgt, 998: None, 999: [0.0] * 8}, k=k_all, min_margin_ppm=1_000_000
+    ) == got_all
     # the planted translations are recovered (src i -> tgt 100+i)
     assert len(got) == len(src)
     assert all(got[i][0] == 100 + i for i in src)

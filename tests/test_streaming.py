@@ -346,9 +346,11 @@ def test_transform_with_state_running_totals(spark, sf_dir):
 def test_stream_embedding_near_dups_against_index(spark, tmp_path):
     """Streamed vectors near-dup to an indexed corpus vector are
     flagged; fresh vectors are not; corpus-internal dups never emit
-    (stream x corpus only)."""
+    (stream x corpus only). The gate and the batch operator run one
+    cross-pair core, so they find the same distinct pairs."""
     import numpy as np
 
+    from syncquill_spark.operators.similarity import embedding_near_dup_against
     from syncquill_spark.streaming import (
         build_embedding_index,
         stream_embedding_near_dups,
@@ -365,13 +367,14 @@ def test_stream_embedding_near_dups_against_index(spark, tmp_path):
     keys, vecs = build_embedding_index(corpus)
 
     stream_dir = str(tmp_path / "stream_in")
-    spark.createDataFrame(
+    new = spark.createDataFrame(
         [
             (200, (base[1] + 1e-6 * base[2]).tolist()),  # dups corpus 101
             (201, rng.normal(size=64).tolist()),         # fresh
         ],
         "vec_id long, embedding array<double>",
-    ).write.parquet(stream_dir)
+    )
+    new.write.parquet(stream_dir)
     stream = spark.readStream.schema(
         "vec_id long, embedding array<double>"
     ).parquet(stream_dir)
@@ -384,6 +387,8 @@ def test_stream_embedding_near_dups_against_index(spark, tmp_path):
     assert (200, 101) in got
     assert all(sid in (200, 201) for sid, _ in got)
     assert (100, 150) not in got and (150, 100) not in got
+    batch = embedding_near_dup_against(new, corpus, threshold=0.95).collect()
+    assert got == {(r.id_new, r.id_corpus) for r in batch}
 
 
 def test_stream_drop_seen_text(spark, tmp_path):

@@ -493,11 +493,13 @@ def case_specs():
 
     # A label whose rows are all ragged gets a ragged centroid that no
     # 64-d vector can be scored against; min_by ranked that NULL
-    # distance first and gave every vector that label.
+    # distance first and gave every vector that label. A NULL embedding
+    # (vec 5) can be scored against no centroid and gets no row: it
+    # used to take the smallest label, every score tying at NULL.
     def _nearest_centroid_skips_ragged_label(ctx):
         base = ctx.base_vec
         rows = [(1, base, 1), (2, [c + 1.0 for c in base], 1),
-                (3, [-c for c in base], 2), (4, base[:63], 0)]
+                (3, [-c for c in base], 2), (4, base[:63], 0), (5, None, 7)]
         got = {
             r.vec_id: r.nearest_label
             for r in _sim().assign_nearest_centroid(ctx.spark.createDataFrame(
